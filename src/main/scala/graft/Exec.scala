@@ -1,98 +1,166 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import scala.util.control.NonFatal
 
-/** Execution-lifecycle helpers shared by operators that branch a
-  * computation off a cached intermediate.
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
+import org.apache.spark.storage.StorageLevel
+
+/** The one materialization boundary: every cache, lineage cut and
+  * free in graft goes through an [[Exec.Scope]].
+  *
+  * The rule, applied to every cut: with `sparkContext.setCheckpointDir`
+  * set (any cluster job should point it at durable storage), a cut is
+  * a RELIABLE checkpoint — files under the dir, recovered after
+  * executor loss by re-reading them. Without one it is a local
+  * checkpoint, which truncates lineage with blocks only in executor
+  * storage: fine in local mode (no executor to lose), unrecoverable
+  * after executor loss on a cluster.
+  *
+  * Freeing is the scope's job, never the call site's: on exit, normal
+  * or by exception, the scope frees every cache and cut that the
+  * returned value does not read (`Dataset.unpersist` alone is a silent
+  * no-op for checkpoint blocks — they live on the RDD inside the
+  * plan's LogicalRDD leaf). What the result does read outlives the
+  * scope; a caller that later drops such a result frees it with
+  * [[Exec.free]].
   */
 object Exec {
 
-  /** Run `f` against a cached copy of `df`, eagerly materializing the
-    * result (`localCheckpoint`) so the cache can be released before
-    * returning. Callers that would otherwise `persist()` an
-    * intermediate and hand back a lazy plan leak the cache for the
-    * life of the session — fatal for per-micro-batch callers
-    * (StreamingIngest) and bench loops, where cached tables pile up
-    * unboundedly. Here the cached input never outlives the call and
-    * the caller gets a small, lineage-free result whose blocks the
-    * ContextCleaner reclaims on GC.
-    *
-    * Use only when `f`'s result is much smaller than its input
-    * (verified pairs, per-batch verdicts): the result is materialized
-    * in executor storage, so a corpus-sized `f` output would trade a
-    * cache leak for a storage spike.
-    *
-    * Cluster-scale caveats, by design: (1) this call is EAGER — the
-    * input is materialized and `f` executed before returning, not
-    * when the caller first acts on the result; (2) the materialized
-    * result's durability depends on the session's checkpoint dir.
-    * With `sparkContext.setCheckpointDir` set (any cluster job should
-    * point it at durable storage), the result is a RELIABLE
-    * checkpoint — executor loss recovers by re-reading the files.
-    * Without one it falls back to `localCheckpoint`, which truncates
-    * lineage with blocks only in executor storage: fine in local mode
-    * (the bench/stream loops this exists for have no executor to
-    * lose), unrecoverable after executor loss on a cluster — so set
-    * the checkpoint dir there.
-    */
-  def withCached(df: DataFrame)(f: DataFrame => DataFrame): DataFrame = {
-    val cached = df.persist()
-    try {
-      cached.count() // materialize once before f's branches race
-      materialize(f(cached))
-    } finally {
-      cached.unpersist()
-      ()
+  /** One scope per thread: it is not synchronized. */
+  final class Scope private[Exec] () {
+    private val rdds = mutable.ArrayBuffer.empty[RDD[_]]
+    private val frames = mutable.ArrayBuffer.empty[DataFrame]
+
+    /** EAGER lineage cut: `df` is computed now, and the returned frame
+      * reads the checkpoint.
+      */
+    def cut(df: DataFrame): DataFrame = {
+      val c = if (reliable(df.sparkSession.sparkContext)) df.checkpoint(true)
+        else df.localCheckpoint(true)
+      rdds ++= planRdds(c.queryExecution.analyzed)
+      c
+    }
+
+    /** LAZY lineage cut: marks `rdd`, which is truncated by the next
+      * SYNCHRONOUS action that computes it (`SparkContext.runJob` runs
+      * `doCheckpoint`; `submitJob`/`countAsync` do not).
+      */
+    def cut[T](rdd: RDD[T]): RDD[T] = {
+      if (reliable(rdd.sparkContext)) {
+        // the checkpoint write job reads the cached blocks instead of
+        // recomputing the round
+        if (rdd.getStorageLevel == StorageLevel.NONE) rdd.persist(StorageLevel.MEMORY_AND_DISK)
+        rdd.checkpoint()
+      } else rdd.localCheckpoint()
+      own(rdd)
+    }
+
+    /** Lazy cache (no lineage cut); filled by the first action over it. */
+    def cache(df: DataFrame): DataFrame = {
+      frames += df.persist()
+      df
+    }
+
+    /** Lazy MEMORY_AND_DISK cache (no lineage cut). */
+    def cache[T](rdd: RDD[T]): RDD[T] = own(rdd.persist(StorageLevel.MEMORY_AND_DISK))
+
+    private def own[T](rdd: RDD[T]): RDD[T] = { rdds += rdd; rdd }
+
+    /** A failure to trace the result frees nothing: a leak, never a
+      * result reading freed blocks.
+      */
+    private[Exec] def close(result: Option[Any]): Unit = quietly {
+      val roots = result.iterator.flatMap(handles).toSeq
+      val plans = roots.collect { case d: Dataset[_] => d.queryExecution.analyzed }
+      val (keptFrames, freedFrames) = frames.partition { f =>
+        val p = f.queryExecution.analyzed
+        plans.exists(_.find(_.sameResult(p)).isDefined)
+      }
+      val read = lineage(
+        roots.collect { case r: RDD[_] => r } ++
+          (plans ++ keptFrames.map(_.queryExecution.analyzed)).flatMap(planRdds))
+      rdds.filterNot(r => read(r.id)).foreach(freeRdd)
+      freedFrames.foreach(f => quietly(f.unpersist(blocking = false)))
     }
   }
 
-  /** `withCached` for a CHAIN of intermediates, each an ANCESTOR of
-    * the last (that is the caller's contract): caches all of them but
-    * materializes with ONE action on the last — computing it fills
-    * every ancestor's cache in the same job, where counting each
-    * separately would pay one full pass per chain member. Runs `f`
-    * against the cached chain and checkpoints the result ONCE —
-    * nesting `withCached` would re-checkpoint the result at every
-    * level. Same contract as `withCached` otherwise: the result must
-    * be much smaller than the cached inputs, and all cache entries
-    * are released before returning. (A non-ancestor chain member
-    * would merely miss eager materialization — `f`'s first touch
-    * fills it then, with at worst benign duplicate partition compute
-    * if two branches race.)
+  /** Run `body` with a fresh [[Scope]] and return its result. On exit
+    * — normal or by exception — every cache and cut made through the
+    * scope that the result does not read is freed. The result is
+    * searched through DataFrames, RDDs, and the products and
+    * collections holding them (a model case class of frames keeps
+    * every frame it holds).
     */
-  def withCachedChain(dfs: Seq[DataFrame])(f: => DataFrame): DataFrame = {
-    require(dfs.nonEmpty, "need at least one intermediate")
-    dfs.foreach(_.persist())
+  def scoped[T](body: Scope => T): T = {
+    val scope = new Scope
+    var result: Option[T] = None
     try {
-      dfs.last.count()
-      materialize(f)
-    } finally {
-      dfs.reverse.foreach(_.unpersist())
-      ()
-    }
+      val r = body(scope)
+      result = Some(r)
+      r
+    } finally scope.close(result)
   }
 
-  private def materialize(result: DataFrame): DataFrame =
-    if (result.sparkSession.sparkContext.getCheckpointDir.isDefined) result.checkpoint(true)
-    else result.localCheckpoint(true)
-
-  /** Drop the block-manager blocks behind a (local)checkpointed frame.
-    * `Dataset.unpersist` only talks to the cache manager and is a
-    * silent NO-OP for checkpoint blocks — they live on the RDD inside
-    * the plan's LogicalRDD leaf, so an iterative operator that
-    * checkpoints per round and never frees leaks one block set per
-    * round for the session's lifetime (the q117 cross-round bench
-    * drift, adjudicated in r13). Iterative loops must free every
-    * retired round frame on exit; only the frame the RETURNED plan
-    * reads may survive. Safe on lazy frames — they have no such leaf.
-    * Frees EVERY LogicalRDD leaf in the plan — do not pass a frame
-    * that shares a checkpoint leaf with a still-live result, or the
-    * live frame's blocks silently go with it.
+  /** Free a frame that outlived its scope (a memo, or a result the
+    * caller drops): its cache entry and every checkpoint leaf of its
+    * plan — do not pass a frame that shares a checkpoint leaf with a
+    * still-live frame, or the live frame's blocks go with it.
     */
-  def freeCheckpoint(df: DataFrame): Unit =
-    try df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
+  def free(df: DataFrame): Unit = quietly {
+    df.unpersist(blocking = false)
+    df.queryExecution.analyzed.foreach {
+      case lr: LogicalRDD => freeRdd(lr.rdd)
       case _ => ()
-    } catch { case scala.util.control.NonFatal(_) => () }
+    }
+  }
+
+  private def reliable(sc: SparkContext): Boolean = sc.getCheckpointDir.isDefined
+
+  private def planRdds(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Seq[RDD[_]] = {
+    val out = mutable.ArrayBuffer.empty[RDD[_]]
+    plan.foreachWithSubqueries {
+      case lr: LogicalRDD => out += lr.rdd
+      case er: ExternalRDD[_] => out += er.rdd
+      case _ => ()
+    }
+    out.toSeq
+  }
+
+  /** Ids of every RDD reachable from `roots` through dependencies (a
+    * truncated RDD's only dependency is its checkpoint).
+    */
+  private def lineage(roots: Seq[RDD[_]]): Set[Int] = {
+    val seen = mutable.HashSet.empty[Int]
+    val stack = mutable.Stack[RDD[_]](roots: _*)
+    while (stack.nonEmpty) {
+      val r = stack.pop()
+      if (seen.add(r.id)) r.dependencies.foreach(d => stack.push(d.rdd))
+    }
+    seen.toSet
+  }
+
+  /** The DataFrames and RDDs a scope result holds. */
+  private def handles(x: Any): Iterator[Any] = x match {
+    case d: Dataset[_] => Iterator(d)
+    case r: RDD[_] => Iterator(r)
+    case i: Iterable[_] => i.iterator.flatMap(handles)
+    case p: Product => p.productIterator.flatMap(handles)
+    case _ => Iterator.empty
+  }
+
+  private def freeRdd(rdd: RDD[_]): Unit = quietly {
+    rdd.unpersist(blocking = false)
+    rdd.getCheckpointFile.foreach { f =>
+      val p = new Path(f)
+      p.getFileSystem(rdd.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
+
+  private def quietly(f: => Any): Unit =
+    try { f; () } catch { case NonFatal(_) => () }
 }

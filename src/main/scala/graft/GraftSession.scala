@@ -26,12 +26,14 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
 
   /** Session with graft defaults, including a CHECKPOINT DIR when none
-    * is configured: Exec.withCached / ConnectedComponents / PageRank
-    * upgrade from localCheckpoint (executor-storage blocks, lost with
-    * the executor) to RELIABLE checkpoints without caller action. The
-    * default is a temp dir — correct for local mode; on a cluster pass
-    * `checkpointDir` pointed at durable shared storage (HDFS/S3), or
-    * pre-set one on the context, which is always respected.
+    * is configured. The one rule (`Exec`): every lineage cut is a
+    * RELIABLE checkpoint when the session has a checkpoint dir and a
+    * local checkpoint (executor-storage blocks, lost with the
+    * executor) otherwise — so every operator's cuts survive executor
+    * loss without caller action. The default is a temp dir — correct
+    * for local mode; on a cluster pass `checkpointDir` pointed at
+    * durable shared storage (HDFS/S3), or pre-set one on the context,
+    * which is always respected.
     */
   def get(checkpointDir: Option[String] = None): SparkSession = {
     val s = builder().getOrCreate()

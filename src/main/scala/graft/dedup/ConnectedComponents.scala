@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   * shape, so swapping the step is local.
   *
   * Driver involvement is one `count()` per round (convergence test) —
-  * O(rounds) actions, never a data collect. Lineage is truncated with
-  * `localCheckpoint` so round N's plan does not replay rounds 1..N-1.
+  * O(rounds) actions, never a data collect. Lineage is cut every
+  * round so round N's plan does not replay rounds 1..N-1.
   */
 object ConnectedComponents {
 
@@ -41,49 +41,41 @@ object ConnectedComponents {
     */
   def components(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
                  maxIter: Int = 25): DataFrame = {
-    val sym = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .persist()
-    // init fuses the first propagation round: comp₀ = min(id, min
-    // neighbor) straight off the edge list — one groupBy instead of a
-    // distinct + a join round. For pair/star-shaped components (the
-    // dominant near-dup shape) this IS the fixpoint, so the loop's
-    // first pass only confirms convergence.
-    var labels = sym.groupBy(col("src"))
-      .agg(least(min(col("dst")), col("src")).as("comp"))
-      .select(col("src").as("id"), col("comp"))
-      .localCheckpoint()
-    // retired round frames are freed on exit; only the final labels
-    // checkpoint (the returned plan's leaf) survives
-    val retired = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val nbrMin = sym
-        .join(labels.withColumnRenamed("id", "dst"), Seq("dst"))
-        .groupBy(col("src").as("id"))
-        .agg(min(col("comp")).as("_nbr"))
-      val stepped = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("_nbr"), col("comp"))).as("comp"),
-          (col("_nbr") < col("comp")).as("_chg"))
-        .localCheckpoint() // materializes the round; truncates lineage
-      converged = stepped.filter(col("_chg")).isEmpty
-      retired += labels
-      labels = stepped.drop("_chg")
-      iter += 1
+    graft.Exec.scoped { b =>
+      val sym = b.cache(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+        .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst"))))
+      // init fuses the first propagation round: comp₀ = min(id, min
+      // neighbor) straight off the edge list — one groupBy instead of a
+      // distinct + a join round. For pair/star-shaped components (the
+      // dominant near-dup shape) this IS the fixpoint, so the loop's
+      // first pass only confirms convergence.
+      var labels = b.cut(sym.groupBy(col("src"))
+        .agg(least(min(col("dst")), col("src")).as("comp"))
+        .select(col("src").as("id"), col("comp")))
+      var iter = 0
+      var converged = false
+      while (!converged && iter < maxIter) {
+        val nbrMin = sym
+          .join(labels.withColumnRenamed("id", "dst"), Seq("dst"))
+          .groupBy(col("src").as("id"))
+          .agg(min(col("comp")).as("_nbr"))
+        // materializes the round; truncates lineage
+        val stepped = b.cut(labels.join(nbrMin, Seq("id"), "left")
+          .select(col("id"),
+            least(col("comp"), coalesce(col("_nbr"), col("comp"))).as("comp"),
+            (col("_nbr") < col("comp")).as("_chg")))
+        converged = stepped.filter(col("_chg")).isEmpty
+        labels = stepped.drop("_chg")
+        iter += 1
+      }
+      if (!converged)
+        throw new IllegalStateException(
+          s"ConnectedComponents did not converge after $maxIter iterations — " +
+            "a component with diameter > maxIter would be silently split into " +
+            "multiple groups. Raise maxIter (rounds are diameter-bounded, so " +
+            "near-dup graphs converge in a handful) or use star-contraction.")
+      labels
     }
-    sym.unpersist()
-    retired.foreach(graft.Exec.freeCheckpoint)
-    if (!converged) {
-      graft.Exec.freeCheckpoint(labels)
-      throw new IllegalStateException(
-        s"ConnectedComponents did not converge after $maxIter iterations — " +
-          "a component with diameter > maxIter would be silently split into " +
-          "multiple groups. Raise maxIter (rounds are diameter-bounded, so " +
-          "near-dup graphs converge in a handful) or use star-contraction.")
-    }
-    labels
   }
 
   /** Dedup grouping: every doc mapped to its near-dup group id (the

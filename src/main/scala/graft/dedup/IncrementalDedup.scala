@@ -68,7 +68,9 @@ object IncrementalDedup {
               threshold: Double = 0.8,
               cfg: MinHashLsh.Config = MinHashLsh.Config()): DataFrame = {
     graft.functions.ShingleFunctions.register(batch.sparkSession)
-    graft.Exec.withCached(MinHashLsh.signatures(batch, idCol, textCol, cfg)) { batchSigs =>
+    graft.Exec.scoped { b =>
+      val batchSigs = b.cache(MinHashLsh.signatures(batch, idCol, textCol, cfg))
+      batchSigs.count() // fill once before the branches race
       val idxBands = guarded(MinHashLsh.banded(index, idCol, cfg), cfg)
         .select(col("band_idx"), col("band_hash"), col(idCol).as("corpus_id"))
       val batBands = guarded(MinHashLsh.banded(batchSigs, idCol, cfg), cfg)
@@ -76,7 +78,7 @@ object IncrementalDedup {
       val candidates = batBands.join(idxBands, Seq("band_idx", "band_hash"))
         .select(col("batch_id"), col("corpus_id"))
         .distinct()
-      candidates
+      b.cut(candidates
         .join(index.select(col(idCol).as("corpus_id"), col("_bases").as("sh_a")), Seq("corpus_id"))
         .join(batchSigs.select(col(idCol).as("batch_id"), col("_bases").as("sh_b")), Seq("batch_id"))
         // raw exact division (the r14 no-round change, matching
@@ -85,7 +87,7 @@ object IncrementalDedup {
         .withColumn("jaccard",
           graft.functions.ShingleFunctions.sortedJaccard(col("sh_a"), col("sh_b")))
         .filter(col("jaccard") >= threshold)
-        .select(col("batch_id"), col("corpus_id"), col("jaccard"))
+        .select(col("batch_id"), col("corpus_id"), col("jaccard")))
     }
   }
 

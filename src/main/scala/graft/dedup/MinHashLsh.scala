@@ -172,9 +172,6 @@ object MinHashLsh {
       .distinct()
   }
 
-  def candidatePairs(docs: DataFrame, idCol: String, textCol: String, cfg: Config): DataFrame =
-    pairsFromBanded(banded(signatures(docs, idCol, textCol, cfg), idCol, cfg), idCol, cfg)
-
   /** Candidate pairs from an ALREADY-COMPUTED signature table —
     * callers evaluating or composing the LSH tier branch candidates
     * AND verification off one cached/persisted `signatures()` result
@@ -217,15 +214,17 @@ object MinHashLsh {
   def nearDuplicates(docs: DataFrame, idCol: String, textCol: String,
                      threshold: Double, cfg: Config = Config()): DataFrame = {
     graft.functions.ShingleFunctions.register(docs.sparkSession)
-    graft.Exec.withCached(signatures(docs, idCol, textCol, cfg)) { sigs =>
+    graft.Exec.scoped { b =>
+      val sigs = b.cache(signatures(docs, idCol, textCol, cfg))
+      sigs.count() // fill once before the branches race
       val pairs = pairsFromBanded(banded(sigs, idCol, cfg), idCol, cfg)
       // raw exact division, no round(): the jaccard is a single
       // mirrored IEEE op, so any engine reproduces it bit-for-bit
       // (the house no-engine-round rule); a rounded presentation is
       // the caller's choice, not the operator's.
-      verifyPairs(pairs, sigs.select(col(idCol), col("_bases")), idCol)
+      b.cut(verifyPairs(pairs, sigs.select(col(idCol), col("_bases")), idCol)
         .filter(col("jaccard") >= threshold)
-        .select(col("id_a"), col("id_b"), col("jaccard"))
+        .select(col("id_a"), col("id_b"), col("jaccard")))
     }
   }
 
@@ -267,7 +266,8 @@ object MinHashLsh {
       else graft.functions.ShingleFunctions.hashedShingles(
         graft.functions.TextFunctions.normalized(col("_t")), cfg.shingleSize)
     val baseRows = sel.select(col("_grp"), explode(basesExpr).as("_b")).distinct()
-    graft.Exec.withCachedChain(Seq(baseRows)) {
+    graft.Exec.scoped { b =>
+      b.cache(baseRows).count() // fill once before the branches race
       // group signature: k min-aggregates of (a·x + b) mod P over the
       // group's distinct bases — one group-keyed exchange, map-side
       // partial mins, identical values to the per-doc-then-merge path
@@ -285,7 +285,7 @@ object MinHashLsh {
         .join(pairs, Seq("id_a"))
         .join(baseRows.toDF("id_b", "_b"), Seq("id_b", "_b"))
         .groupBy("id_a", "id_b").agg(count(lit(1)).as("_inter"))
-      pairs.join(inter, Seq("id_a", "id_b"), "left")
+      b.cut(pairs.join(inter, Seq("id_a", "id_b"), "left")
         .na.fill(0L, Seq("_inter"))
         .join(sizes.toDF("id_a", "_na"), Seq("id_a"))
         .join(sizes.toDF("id_b", "_nb"), Seq("id_b"))
@@ -296,7 +296,7 @@ object MinHashLsh {
         .filter(col("jaccard") >= threshold)
         .select(col("id_a").as("grp_a"), col("id_b").as("grp_b"),
           col("_inter").as("n_inter"), col("_na").as("n_a"),
-          col("_nb").as("n_b"), col("jaccard"))
+          col("_nb").as("n_b"), col("jaccard")))
     }
   }
 }

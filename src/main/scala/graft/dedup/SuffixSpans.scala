@@ -44,27 +44,27 @@ import org.apache.spark.sql.functions._
   */
 object SuffixSpans {
 
-  /** Persist the exploded positions frame before the range sort IFF
-    * its estimated size fits `spark.graft.suffix.cacheMaxBytes`
-    * (default 8 GiB): the RangePartitioner's sampling job otherwise
-    * re-executes the whole explode+substring subtree before the real
-    * shuffle map stage runs it a second time (guide §1.2 — measured
-    * −37% on q188 at sf0.1). Above the threshold the recompute is the
-    * RIGHT call — materializing a positions-scale (≈ corpus-size × k)
-    * intermediate to executor disk at 100 TB costs more than the
-    * map-only second pass — so the gate keeps the at-scale behavior
-    * while the bench-scale run takes the cached path. Returns whether
-    * it persisted (caller unpersists after the sort materializes).
+  /** Positions frames up to this estimated size are cached before the
+    * range sort (see [[cachePositions]]).
     */
-  private def maybePersistPositions(pos: DataFrame): Boolean = {
-    val maxBytes = pos.sparkSession.conf
-      .getOption("spark.graft.suffix.cacheMaxBytes").map(_.toLong)
-      .getOrElse(8L << 30)
-    val est = pos.queryExecution.optimizedPlan.stats.sizeInBytes
-    val doIt = est <= maxBytes
-    if (doIt) { pos.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK); () }
-    doIt
-  }
+  private val PositionsCacheMaxBytes = 8L << 30
+
+  /** Cache the exploded positions frame before the range sort IFF its
+    * estimated size fits [[PositionsCacheMaxBytes]]: the
+    * RangePartitioner's sampling job otherwise re-executes the whole
+    * explode+substring subtree before the real shuffle map stage runs
+    * it a second time (guide §1.2 — measured −37% on q188 at sf0.1).
+    * Above the threshold the recompute is the RIGHT call —
+    * materializing a positions-scale (≈ corpus-size × k) intermediate
+    * to executor disk at 100 TB costs more than the map-only second
+    * pass — so the gate keeps the at-scale behavior while the
+    * bench-scale run takes the cached path.
+    */
+  private def cachePositions(pos: DataFrame, scope: graft.Exec.Scope): Unit =
+    if (pos.queryExecution.optimizedPlan.stats.sizeInBytes <= PositionsCacheMaxBytes) {
+      scope.cache(pos)
+      ()
+    }
 
   /** Per-document duplicated-span statistics: (doc_id, n_positions,
     * n_dup_pos, n_dup_cross, max_lcp, max_lcp_cross) — positions
@@ -74,15 +74,13 @@ object SuffixSpans {
     */
   def docStats(docs: DataFrame, idCol: String, textCol: String,
                k: Int = 48, minSpan: Int = 20): DataFrame = {
-    val (sorted, result) = buildPlan(docs, idCol, textCol, k, minSpan)
-    // the doc-scale result is checkpointed once, then the cached
-    // positions-scale suffix order is released
-    try result.localCheckpoint(true)
-    finally { sorted.unpersist(blocking = false); () }
+    // the doc-scale result is cut once; the scope then releases the
+    // cached positions-scale suffix order
+    graft.Exec.scoped(b => b.cut(buildPlan(docs, idCol, textCol, k, minSpan, b)))
   }
 
-  /** The operator tree: the cached suffix-ordered position RDD and
-    * the doc-stats aggregate reading it. Neighbor LCPs are computed
+  /** The operator tree: the doc-stats aggregate reading the
+    * suffix-ordered position RDD, cached in `scope`. Neighbor LCPs are computed
     * PARTITION-LOCALLY in one sliding pass (r14d — this replaced the
     * original zipWithIndex + two rank-keyed self-joins: the global
     * rank existed only to find neighbors, but after the range sort
@@ -97,8 +95,7 @@ object SuffixSpans {
     * assignment + two joins) to one (the range sort itself).
     */
   private[graft] def buildPlan(docs: DataFrame, idCol: String, textCol: String,
-                               k: Int, minSpan: Int)
-  : (org.apache.spark.rdd.RDD[(Long, Int, String)], DataFrame) = {
+                               k: Int, minSpan: Int, scope: graft.Exec.Scope): DataFrame = {
     require(k >= 1 && minSpan >= 1 && minSpan <= k,
       s"need 1 <= minSpan <= k, got k=$k minSpan=$minSpan")
     val spark = docs.sparkSession
@@ -108,26 +105,25 @@ object SuffixSpans {
       .filter(length(col("t")) >= 1) // sequence(1,0) would DESCEND, not empty
       .select(col("id"), explode(sequence(lit(1), length(col("t")))).as("p"), col("t"))
       .select(col("id"), col("p"), expr(s"substring(t, p, $k)").as("key"))
-    // r17: size-gated positions cache (see maybePersistPositions);
-    // released right after the sorted RDD materializes.
-    val posCached = maybePersistPositions(pos)
-    val sorted = pos
-      .repartitionByRange(col("key"), col("id"), col("p"))
-      .sortWithinPartitions(col("key"), col("id"), col("p"))
-      .as[(Long, Int, String)].rdd
-    sorted.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // per-partition FIRST and LAST (id, key) — numPartitions rows to
-    // the driver, never data
-    val bounds = sorted.mapPartitionsWithIndex { (pid, it) =>
-      if (!it.hasNext) Iterator.empty
-      else {
-        val f = it.next(); var l = f
-        while (it.hasNext) l = it.next()
-        Iterator((pid, (f._1, f._3), (l._1, l._3)))
-      }
-    }.collect().sortBy(_._1)
-    if (posCached) { pos.unpersist(blocking = false); () }
+    // r17: size-gated positions cache (see cachePositions), in its own
+    // scope — released right after the sorted RDD materializes
+    val (sorted, bounds) = graft.Exec.scoped { posScope =>
+      cachePositions(pos, posScope)
+      val sorted = scope.cache(pos
+        .repartitionByRange(col("key"), col("id"), col("p"))
+        .sortWithinPartitions(col("key"), col("id"), col("p"))
+        .as[(Long, Int, String)].rdd)
+      // per-partition FIRST and LAST (id, key) — numPartitions rows to
+      // the driver, never data
+      (sorted, sorted.mapPartitionsWithIndex { (pid, it) =>
+        if (!it.hasNext) Iterator.empty
+        else {
+          val f = it.next(); var l = f
+          while (it.hasNext) l = it.next()
+          Iterator((pid, (f._1, f._3), (l._1, l._3)))
+        }
+      }.collect().sortBy(_._1))
+    }
     val nParts = sorted.getNumPartitions
     // carry(prevOf)(pid) = last row of the nearest earlier non-empty
     // partition; nextOf symmetric (RangePartitioner can leave holes)
@@ -175,7 +171,7 @@ object SuffixSpans {
 
     val crossPrev = when(col("id_prev") =!= col("id"), col("lcp_prev")).otherwise(0)
     val crossNext = when(col("id_next") =!= col("id"), col("lcp_next")).otherwise(0)
-    val result = perPos.groupBy(col("id").as("doc_id"))
+    perPos.groupBy(col("id").as("doc_id"))
       .agg(count(lit(1)).as("n_positions"),
         sum(when(col("lcp_prev") >= minSpan || col("lcp_next") >= minSpan, 1L)
           .otherwise(0L)).as("n_dup_pos"),
@@ -183,7 +179,6 @@ object SuffixSpans {
           .otherwise(0L)).as("n_dup_cross"),
         max(greatest(col("lcp_prev"), col("lcp_next"))).cast("long").as("max_lcp"),
         max(greatest(crossPrev, crossNext)).cast("long").as("max_lcp_cross"))
-    (sorted, result)
   }
 
   /** EXACT CROSS-CORPUS SUBSTRING CONTAMINATION — the decontamination
@@ -236,28 +231,27 @@ object SuffixSpans {
     // and one backward scan over the buffered partition replace the
     // two window sorts the previous shape paid, and the _pid exchange
     // disappears entirely.
-    // r17: size-gated positions cache (see maybePersistPositions);
-    // released right after the sorted RDD materializes.
-    val posCached = maybePersistPositions(pos)
-    val sorted = pos
-      .repartitionByRange(col("key"), col("id"), col("p"))
-      .sortWithinPartitions(col("key"), col("id"), col("p"))
-      .as[(Long, Boolean, Int, String)].rdd
-    sorted.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // per-partition first/last TRAIN key — numPartitions rows to the
-      // driver, never data
-      val bounds = sorted.mapPartitionsWithIndex { (pid, it) =>
-        var first: String = null
-        var last: String = null
-        while (it.hasNext) {
-          val r = it.next()
-          if (r._2) { if (first == null) first = r._4; last = r._4 }
-        }
-        if (first == null) Iterator.empty else Iterator((pid, first, last))
-      }.collect().sortBy(_._1)
-      if (posCached) { pos.unpersist(blocking = false); () } // sorted is
-      // materialized; the pre-sort positions are never read again
+    graft.Exec.scoped { b =>
+      // r17: size-gated positions cache (see cachePositions), in its own
+      // scope — released right after the sorted RDD materializes
+      val (sorted, bounds) = graft.Exec.scoped { posScope =>
+        cachePositions(pos, posScope)
+        val sorted = b.cache(pos
+          .repartitionByRange(col("key"), col("id"), col("p"))
+          .sortWithinPartitions(col("key"), col("id"), col("p"))
+          .as[(Long, Boolean, Int, String)].rdd)
+        // per-partition first/last TRAIN key — numPartitions rows to the
+        // driver, never data
+        (sorted, sorted.mapPartitionsWithIndex { (pid, it) =>
+          var first: String = null
+          var last: String = null
+          while (it.hasNext) {
+            val r = it.next()
+            if (r._2) { if (first == null) first = r._4; last = r._4 }
+          }
+          if (first == null) Iterator.empty else Iterator((pid, first, last))
+        }.collect().sortBy(_._1))
+      }
       val nParts = sorted.getNumPartitions
       val before = new Array[String](nParts)
       val after = new Array[String](nParts)
@@ -305,12 +299,11 @@ object SuffixSpans {
         new GapScanIterator(it, bcBefore.value(pid), bcAfter.value(pid),
           gapBufferRows, lcp)
       }.toDF("id", "_l")
-      val result = evalRows.groupBy(col("id").as("doc_id"))
+      b.cut(evalRows.groupBy(col("id").as("doc_id"))
         .agg(count(lit(1)).as("n_positions"),
           sum(when(col("_l") >= minSpan, 1L).otherwise(0L)).as("n_contaminated"),
-          max(col("_l")).cast("long").as("max_train_lcp"))
-      result.localCheckpoint(true)
-    } finally { sorted.unpersist(blocking = false); () }
+          max(col("_l")).cast("long").as("max_train_lcp")))
+    }
   }
 }
 

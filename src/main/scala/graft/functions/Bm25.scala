@@ -54,18 +54,14 @@ object Bm25 {
     // explode+aggregate subtree into each (r17 plan audit: 10 parquet
     // scans / 48 exchanges, zero ReusedExchange — the consumers prune
     // different columns, so the exchanges are not canonically equal).
-    // Two eager localCheckpoints run the corpus-scale work exactly
-    // once (the persist/InMemoryRelation form was probed at several
-    // times the CPU); at cluster scale each boundary is a
-    // scratch-table write. Both checkpoints are leaves of the returned
-    // plan — a caller discarding the result frees them via
-    // Exec.freeCheckpoint (the bench loop's blocks fall to the
-    // ContextCleaner on GC).
-    val tc = terms.groupBy(col(idCol), col("token"))
-      .agg(count(lit(1)).as("n_term"))
-      .localCheckpoint(true)
-    val dl = tc.groupBy(col(idCol)).agg(sum(col("n_term")).as("n_doc_tokens"))
-      .localCheckpoint(true)
+    // Two eager cuts run the corpus-scale work exactly once (the
+    // cached/InMemoryRelation form was probed at several times the
+    // CPU); at cluster scale each boundary is a scratch-table write.
+    // Both cuts are leaves of the returned plan.
+    val (tc, dl) = graft.Exec.scoped { b =>
+      val tc = b.cut(terms.groupBy(col(idCol), col("token")).agg(count(lit(1)).as("n_term")))
+      (tc, b.cut(tc.groupBy(col(idCol)).agg(sum(col("n_term")).as("n_doc_tokens"))))
+    }
     // df over the FULL corpus but only for query terms: semi join
     // first so the aggregate is query-vocabulary-sized
     val qTerms = queries.select(col("term")).distinct()

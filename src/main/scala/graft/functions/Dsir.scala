@@ -110,21 +110,19 @@ object Dsir {
     // whole explode+aggregate corpus subtree into every consumer (the
     // r17 plan audit: 24 parquet scans / 76 exchanges, zero
     // ReusedExchange — the consumers prune different columns, so the
-    // exchanges are not canonically equal). Two eager localCheckpoints
-    // run the corpus-scale work exactly once (the persist/
-    // InMemoryRelation form was probed at several times the CPU —
-    // columnar build + per-reference decompress); at cluster scale
-    // each boundary is a scratch-table write, never a
-    // recompute-per-consumer. The feature checkpoint is freed as soon
-    // as the evidence frame materializes; only the doc-scale evidence
-    // checkpoint outlives the call (it IS the returned plan's leaf).
-    val feats = docFeatures(df, idCol, textCol, buckets)
-      .join(df.select(col(idCol), isTarget.as("_tgt")), Seq(idCol))
-      .localCheckpoint(true)
-    val model = bucketModel(feats, col("_tgt"))
-    val raw = feats.filter(!col("_tgt"))
-    val scored = score(raw, model, idCol).localCheckpoint(true)
-    graft.Exec.freeCheckpoint(feats) // not referenced by the returned plan
+    // exchanges are not canonically equal). Two eager cuts run the
+    // corpus-scale work exactly once (the cached/InMemoryRelation form
+    // was probed at several times the CPU — columnar build +
+    // per-reference decompress); at cluster scale each boundary is a
+    // scratch-table write, never a recompute-per-consumer. Only the
+    // doc-scale evidence cut outlives the call (it IS the returned
+    // plan's leaf).
+    val scored = graft.Exec.scoped { b =>
+      val feats = b.cut(docFeatures(df, idCol, textCol, buckets)
+        .join(df.select(col(idCol), isTarget.as("_tgt")), Seq(idCol)))
+      val model = bucketModel(feats, col("_tgt"))
+      b.cut(score(feats.filter(!col("_tgt")), model, idCol))
+    }
     val topK = scored
       .orderBy(col("score").desc, col(idCol))
       .limit(k)

@@ -75,7 +75,7 @@ object KneserNey {
     // builds (r18 measured). One eager boundary runs the corpus pass
     // once; the boundary is the MODEL table (bigram-type scale) — the
     // artifact a production LM pipeline persists anyway.
-    val bg = bigramCounts(docs, textCol).localCheckpoint(true)
+    val bg = graft.Exec.scoped(_.cut(bigramCounts(docs, textCol)))
     val c1 = bg.groupBy("w1").agg(sum("c12").as("c1"), count(lit(1)).as("n1f"))
     val n1b = bg.groupBy("w2").agg(count(lit(1)).as("n1b"))
     val b = bg.agg(count(lit(1)).as("b_total"))
@@ -149,9 +149,11 @@ object KneserNey {
     // (w2,w3) marginal `mid` feeds THREE consumers — both eagerly
     // materialized once (type-table scale), so the corpus trigram
     // explode runs once instead of once per consumer.
-    val tg = trigramCounts(docs, textCol).localCheckpoint(true)
+    val (tg, mid) = graft.Exec.scoped { b =>
+      val tg = b.cut(trigramCounts(docs, textCol))
+      (tg, b.cut(tg.groupBy("w2", "w3").agg(count(lit(1)).as("mnum"))))
+    }
     val ctx = tg.groupBy("w1", "w2").agg(sum("c123").as("c12"), count(lit(1)).as("n3f"))
-    val mid = tg.groupBy("w2", "w3").agg(count(lit(1)).as("mnum")).localCheckpoint(true)
     val midCtx = mid.groupBy("w2").agg(sum("mnum").as("mden"), count(lit(1)).as("mf"))
     val uni = mid.groupBy("w3").agg(count(lit(1)).as("unum"))
     val total = mid.agg(count(lit(1)).as("uden"))

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** TRAINED linear quality classifier over hashed n-gram features —
   * the tier the CCNet/RefinedWeb-style curation recipes train (a
@@ -69,13 +68,12 @@ object Perceptron {
   def trainBatch(docs: DataFrame, idCol: String, textCol: String,
                  posLabel: Column, buckets: Int, epochs: Int): Model = {
     val spark = docs.sparkSession
-    val rows = Dsir.docFeatures(docs, idCol, textCol, buckets)
-      .join(docs.select(col(idCol),
-        when(posLabel, 1L).otherwise(-1L).as("_y")), Seq(idCol))
-      .select(col(idCol).as("_id"), col("bucket"), col("n"), col("_y"))
-      .repartition(col("_id")) // every epoch's margin window reuses this layout
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.Exec.scoped { sc =>
+      val rows = sc.cache(Dsir.docFeatures(docs, idCol, textCol, buckets)
+        .join(docs.select(col(idCol),
+          when(posLabel, 1L).otherwise(-1L).as("_y")), Seq(idCol))
+        .select(col(idCol).as("_id"), col("bucket"), col("n"), col("_y"))
+        .repartition(col("_id"))) // every epoch's margin window reuses this layout
       val w = Array.fill(buckets)(0L)
       val wm = Window.partitionBy(col("_id"))
       (0 until epochs).foreach { _ =>
@@ -90,7 +88,7 @@ object Perceptron {
         deltas.foreach(r => w(r.getLong(0).toInt) += r.getLong(1))
       }
       Model(buckets, epochs, w)
-    } finally { rows.unpersist(blocking = false); () }
+    }
   }
 
   /** Margin of every FEATURED doc under the trained model — one

@@ -272,10 +272,9 @@ object Stats {
     * PARTITION-LOCAL running windows with per-partition offsets — the
     * distributed prefix sum; no global window funnel. The offsets
     * pass and the window pass must see the SAME partition layout, so
-    * the sorted count table rides `Exec.withCached` (range boundaries
+    * the sorted count table is cached for the call (range boundaries
     * are sampled per execution — two uncached executions could split
-    * differently and mis-offset); the result is one row, the
-    * withCached contract exactly. decimal(38,0) cross products
+    * differently and mis-offset); the one-row result is cut. decimal(38,0) cross products
     * (cum·n reaches n²). Output: (n_a, n_b, n_values, d_num, d) with
     * d_num = max |cumA·n_B − cumB·n_A| exact; either side empty →
     * null d.
@@ -331,7 +330,9 @@ object Stats {
       .repartitionByRange(col("_v"))
       .sortWithinPartitions("_v")
       .withColumn("_pid", spark_partition_id())
-    graft.Exec.withCached(g) { sg =>
+    graft.Exec.scoped { b =>
+      val sg = b.cache(g)
+      sg.count() // one range layout for both passes
       val parts = sg.groupBy(col("_pid"))
         .agg(sum(col("_a")).as("pa"), sum(col("_b")).as("pb"))
         .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
@@ -350,7 +351,7 @@ object Stats {
       val offBCol = offBMap.foldLeft(lit(0L)) { case (acc, (p, o)) =>
         when(col("_pid") === p, lit(o)).otherwise(acc) }
       val d = "decimal(38,0)"
-      sg.withColumn("_ca", (offACol + sum(col("_a")).over(w)).cast(d))
+      b.cut(sg.withColumn("_ca", (offACol + sum(col("_a")).over(w)).cast(d))
         .withColumn("_cb", (offBCol + sum(col("_b")).over(w)).cast(d))
         .agg(
           count(lit(1)).as("n_values"),
@@ -361,7 +362,7 @@ object Stats {
           col("_dnum").cast("long").as("d_num"),
           when(lit(nA) === 0L || lit(nB) === 0L, lit(null).cast("double"))
             .otherwise(col("_dnum").cast("double") /
-              (lit(nA).cast("double") * lit(nB).cast("double"))).as("d"))
+              (lit(nA).cast("double") * lit(nB).cast("double"))).as("d")))
     }
   }
 
@@ -485,15 +486,16 @@ object Stats {
     // vc's checkpoint blocks, one bounded join+agg each, cheaper than
     // a fourth eager job. One block set per frame survives for the
     // caller's plan (the PageRank/Hits precedent).
-    val vc = df.select(group.cast("string").as("_g"), value.cast("long").as("_v"))
-      .groupBy("_g", "_v").agg(count(lit(1)).as("_c"))
-      .localCheckpoint(true)
     // med feeds dev's join and the final output — one row per group,
     // broadcast EXPLICITLY: a checkpoint's LogicalRDD leaf carries no
     // size stats, so without the hint the planner falls back to
     // sort-merge and shuffles the value table by group (guide §3.1:
     // estimates are often wrong — hint when you know a side is small).
-    val med = medianOf(vc).localCheckpoint(true)
+    val (vc, med) = graft.Exec.scoped { b =>
+      val vc = b.cut(df.select(group.cast("string").as("_g"), value.cast("long").as("_v"))
+        .groupBy("_g", "_v").agg(count(lit(1)).as("_c")))
+      (vc, b.cut(medianOf(vc)))
+    }
     val dev = vc.join(broadcast(med.select(col("_g"), col("_med"))), "_g")
       .select(col("_g"), abs(col("_v") - col("_med")).as("_v"), col("_c"))
       .groupBy("_g", "_v").agg(sum(col("_c")).as("_c"))

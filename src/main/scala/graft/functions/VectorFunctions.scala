@@ -51,14 +51,4 @@ object VectorFunctions {
     */
   def cosineFromNorms(dot: Column, na: Column, nb: Column): Column =
     when(na === 0.0 || nb === 0.0, 0.0).otherwise(dot / (na * nb))
-
-  /** Squared euclidean distance (for IVF coarse assignment). */
-  def sqDist(a: Column, b: Column, dim: Int): Column =
-    aggregate(
-      transform(sequence(lit(1), lit(dim)),
-        i => {
-          val d = element_at(a, i).cast("double") - element_at(b, i).cast("double")
-          d * d
-        }),
-      lit(0.0), (acc, x) => acc + x)
 }

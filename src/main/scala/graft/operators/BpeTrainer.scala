@@ -90,29 +90,25 @@ object BpeTrainer {
     */
   def train(df: DataFrame, textCol: String, k: Int): Seq[Merge] = {
     require(k >= 1 && k <= 64, "k must be in [1, 64] (driver does one argmax per round)")
-    var words = wordTable(df, textCol).localCheckpoint(true)
-    // the result is plain driver data (the merge table), so EVERY
-    // round checkpoint is freed on exit — nothing survives the call
-    val rounds = scala.collection.mutable.ArrayBuffer(words)
-    val out = Vector.newBuilder[Merge]
-    var rank = 1
-    var exhausted = false
-    while (rank <= k && !exhausted) {
-      val best = roundArgmax(words).collect() // ONE row: the round's argmax
-      if (best.isEmpty) exhausted = true
-      else {
-        val l = best(0).getString(0); val r = best(0).getString(1)
-        val c = best(0).getLong(2)
-        out += Merge(rank.toLong, l, r, c)
-        words = words
-          .withColumn("syms", applyMerge("syms", l, r))
-          .localCheckpoint(true) // truncate the per-round lineage
-        rounds += words
-        rank += 1
+    graft.Exec.scoped { b =>
+      var words = b.cut(wordTable(df, textCol))
+      val out = Vector.newBuilder[Merge]
+      var rank = 1
+      var exhausted = false
+      while (rank <= k && !exhausted) {
+        val best = roundArgmax(words).collect() // ONE row: the round's argmax
+        if (best.isEmpty) exhausted = true
+        else {
+          val l = best(0).getString(0); val r = best(0).getString(1)
+          val c = best(0).getLong(2)
+          out += Merge(rank.toLong, l, r, c)
+          // truncate the per-round lineage
+          words = b.cut(words.withColumn("syms", applyMerge("syms", l, r)))
+          rank += 1
+        }
       }
+      out.result()
     }
-    rounds.foreach(graft.Exec.freeCheckpoint)
-    out.result()
   }
 
   /** The merge table as a DataFrame (q91's driver-query surface). */

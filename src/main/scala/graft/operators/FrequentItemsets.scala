@@ -48,16 +48,16 @@ object FrequentItemsets {
     // re-inlines the corpus distinct subtree into every consumer (r17
     // plan audit: 12 parquet scans / 34 exchanges, zero
     // ReusedExchange — different column pruning per consumer). Two
-    // eager localCheckpoints run the corpus-scale distinct + support
-    // aggregate exactly once (the persist/InMemoryRelation form was
+    // eager cuts run the corpus-scale distinct + support
+    // aggregate exactly once (the cached/InMemoryRelation form was
     // probed at several times the CPU); at cluster scale each boundary
-    // is a scratch-table write. Both checkpoints are leaves of the
-    // returned plan — a caller discarding the result frees them via
-    // Exec.freeCheckpoint.
-    val items = baskets.select(col(basketCol).as("b"), col(itemCol).as("it")).distinct()
-      .localCheckpoint(true)
-    val support = items.groupBy("it").agg(count(lit(1)).as("n"))
-    val frequent = support.filter(col("n") >= minSupport).localCheckpoint(true)
+    // is a scratch-table write. Both cuts are leaves of the returned
+    // plan.
+    val (items, frequent) = graft.Exec.scoped { b =>
+      val items = b.cut(baskets.select(col(basketCol).as("b"), col(itemCol).as("it")).distinct())
+      val support = items.groupBy("it").agg(count(lit(1)).as("n"))
+      (items, b.cut(support.filter(col("n") >= minSupport)))
+    }
 
     val fi = items.join(frequent.select("it"), Seq("it"), "left_semi")
     val pairs = fi.select(col("b"), col("it").as("item_a"))

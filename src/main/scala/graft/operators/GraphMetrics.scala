@@ -23,15 +23,6 @@ import org.apache.spark.sql.functions._
   * set is unbounded) and nothing funnels to the driver. Triangle
   * counts are orientation-invariant, so the DuckDB oracle's simpler
   * id-ordered formulation (q86) must agree exactly.
-  *
-  * `nodeMetrics` caches the shared edge-scale subtrees (canonical
-  * edges, degrees, oriented edges): the oriented edge set feeds
-  * three self-join references and the canonicalization `distinct`
-  * shuffle would otherwise re-run once per reference. The triangle
-  * corner stream itself is never materialized — it flows straight
-  * into the per-node aggregate (triangle volume can exceed m; only
-  * the node-scale result is checkpointed, per Exec.withCached's
-  * contract).
   */
 object GraphMetrics {
 
@@ -84,73 +75,30 @@ object GraphMetrics {
   }
 
   /** (node, degree, triangles) for every node with at least one
-    * edge; `triangles` counts the triangles the node is a corner of.
-    *
-    * ONE lazy plan, no explicit caching: the shared subtrees (the
-    * canonicalization `distinct`, the degree aggregate, the oriented
-    * edge set) each end at an exchange, and Spark's exchange reuse
-    * (`spark.sql.exchange.reuse`, on by default, AQE-preserved)
-    * dedupes the identical subtrees — the lineitem-scale work below
-    * each shuffle runs ONCE however many times the plan references
-    * it. Measured against the persist-count-checkpoint formulation
-    * this held in r13 (`Exec.withCachedChain`): the lazy plan is
-    * ~0.2-0.4 s faster per call at sf0.1 (saves the eager count job,
-    * the result-checkpoint job, and three persist/unpersist round
-    * trips) and leaves ZERO persistent blocks behind, where the
-    * cached version retired one result-checkpoint block set per call
-    * (the r13→r14 q86 bench-drift adjudication; PLANS.md). Callers
-    * that re-execute the RESULT many times should persist it
-    * themselves — `nodeMetricsCached` does exactly that.
-    */
-  def nodeMetrics(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val canon = canonical(edges, srcCol, dstCol)
-    val deg = degrees(canon)
-    joinMetrics(deg, orient(canon, deg))
-  }
-
-  /** `nodeMetrics` materialized against an explicitly cached chain —
-    * for sessions running with exchange reuse DISABLED (where every
-    * plan reference re-runs the canonicalization shuffle) or callers
-    * that act on the result repeatedly. The result rides a
-    * (local)checkpoint whose blocks outlive the call by design; a
-    * caller discarding it must `Exec.freeCheckpoint` it.
-    */
-  def nodeMetricsCached(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val canon = canonical(edges, srcCol, dstCol)
-    val deg = degrees(canon)
-    val oriented = orient(canon, deg)
-    Exec.withCachedChain(Seq(canon, deg, oriented)) {
-      joinMetrics(deg, oriented)
-    }
-  }
-
-  /** `nodeMetrics` over eagerly-materialized shared frames — the r18
-    * shape for ONE metrics pass per call (q86). The lazy plan
+    * edge; `triangles` counts the triangles the node is a corner of —
+    * the q86 shape, over eagerly cut shared frames. A lazy plan
     * re-inlines the canonicalization/degree/orientation subtrees into
     * every consumer (exchange reuse does NOT dedupe them: each
     * consumer prunes different columns, so the exchanges are not
     * canonically equal — the r17/r18 plan audits show 34 live parquet
-    * scans and zero ReusedExchange in the EXECUTED plan), and the
-    * `withCachedChain` form pays the InMemoryRelation columnar
+    * scans and zero ReusedExchange in the EXECUTED plan), and a
+    * cached (InMemoryRelation) form pays the columnar
     * build/decompress on every reference (probed at ~6-10x the CPU of
-    * either alternative at sf0.1). Three sequential localCheckpoints
-    * run the edge-scale work exactly once; the probe has this at
-    * ~0.7x the lazy plan's wall and ~0.6x its CPU at sf0.1, with the
-    * gap widening with scale (the duplicated subtrees are pure added
-    * cost once cores are not idle). At cluster scale each boundary is
-    * a scratch-table write (GraftSession note), never a
-    * recompute-per-metric. The returned plan reads the degree and
-    * oriented-edge checkpoints (caller frees via `Exec.freeCheckpoint`
-    * when discarding); the canonical-edge checkpoint is freed here —
-    * only its two descendants outlive the call.
+    * either alternative at sf0.1). Three sequential cuts run the
+    * edge-scale work exactly once; the probe has this at ~0.7x the
+    * lazy plan's wall and ~0.6x its CPU at sf0.1, with the gap
+    * widening with scale. The triangle corner stream itself is never
+    * materialized — it flows straight into the per-node aggregate
+    * (triangle volume can exceed m). The returned plan reads the
+    * degree and oriented-edge cuts (a caller dropping the result
+    * frees them via `Exec.free`).
     */
-  def nodeMetricsOnePass(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val canonC = canonical(edges, srcCol, dstCol).localCheckpoint(true)
-    val degC = degrees(canonC).localCheckpoint(true)
-    val orientedC = orient(canonC, degC).localCheckpoint(true)
-    Exec.freeCheckpoint(canonC) // not referenced by the returned plan
-    joinMetrics(degC, orientedC)
-  }
+  def nodeMetricsOnePass(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    Exec.scoped { b =>
+      val canon = b.cut(canonical(edges, srcCol, dstCol))
+      val deg = b.cut(degrees(canon))
+      joinMetrics(deg, b.cut(orient(canon, deg)))
+    }
 
   /** The k-CORE: nodes of the maximal subgraph in which every node
     * has degree ≥ k (with their within-core degree) — the classic
@@ -163,8 +111,8 @@ object GraphMetrics {
     * degrees, repeat to fixpoint. Each round is one degree aggregate
     * + two anti-joins on the edge list (all key shuffles, nothing
     * broadcast, nothing data-sized on the driver — one emptiness
-    * probe per round), with `localCheckpoint` lineage truncation per
-    * round (the ConnectedComponents pattern). Round count is bounded
+    * probe per round), with a lineage cut per round (the
+    * ConnectedComponents pattern). Round count is bounded
     * by the peel depth, data-dependent but small for power-law
     * graphs; `maxIter` fail-fasts rather than returning a partially
     * peeled (NOT-a-core) subgraph — a k=2 peel of a long path needs
@@ -173,36 +121,30 @@ object GraphMetrics {
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
             maxIter: Int = 50): DataFrame = {
     require(k >= 1, s"k must be ≥ 1: $k")
-    var canon = canonical(edges, srcCol, dstCol).localCheckpoint()
-    // retired peel-round checkpoints are freed on every exit path;
-    // only the final canon (the returned degree plan's leaf) survives
-    val retired = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var iter = 0
-    while (iter < maxIter) {
-      val deg = degrees(canon)
-      // r18 (guide §2.4): the loser set drives the round's fixpoint
-      // probe AND both anti joins of the next peel — materialized once
-      // per round (loser-scale, strictly smaller than the frontier),
-      // so the degree aggregate runs once per round instead of twice
-      // (the probe's run and the next canon's shared subtree).
-      val losers = deg.filter(col("degree") < k).select(col("node"))
-        .localCheckpoint(true)
-      retired += losers
-      if (losers.isEmpty) { retired.foreach(graft.Exec.freeCheckpoint); return deg }
-      retired += canon
-      canon = canon
-        .join(losers.withColumnRenamed("node", "a"), Seq("a"), "left_anti")
-        .join(losers.withColumnRenamed("node", "b"), Seq("b"), "left_anti")
-        .localCheckpoint()
-      iter += 1
-    }
-    // one fixpoint check after the last allowed peel
-    val deg = degrees(canon)
-    retired.foreach(graft.Exec.freeCheckpoint)
-    if (deg.filter(col("degree") < k).isEmpty) deg
-    else {
-      graft.Exec.freeCheckpoint(canon)
-      throw new IllegalStateException(
+    Exec.scoped { b =>
+      var canon = b.cut(canonical(edges, srcCol, dstCol))
+      var deg = degrees(canon)
+      var settled = false
+      var iter = 0
+      while (!settled && iter < maxIter) {
+        // r18 (guide §2.4): the loser set drives the round's fixpoint
+        // probe AND both anti joins of the next peel — materialized once
+        // per round (loser-scale, strictly smaller than the frontier),
+        // so the degree aggregate runs once per round instead of twice
+        // (the probe's run and the next canon's shared subtree).
+        val losers = b.cut(deg.filter(col("degree") < k).select(col("node")))
+        settled = losers.isEmpty
+        if (!settled) {
+          canon = b.cut(canon
+            .join(losers.withColumnRenamed("node", "a"), Seq("a"), "left_anti")
+            .join(losers.withColumnRenamed("node", "b"), Seq("b"), "left_anti"))
+          deg = degrees(canon)
+          iter += 1
+        }
+      }
+      // one fixpoint check after the last allowed peel
+      if (settled || deg.filter(col("degree") < k).isEmpty) deg
+      else throw new IllegalStateException(
         s"kCore(k=$k) did not reach the fixpoint after $maxIter peel rounds — " +
           "returning now would yield a subgraph that is NOT the k-core. Raise " +
           "maxIter (rounds are peel-depth-bounded).")

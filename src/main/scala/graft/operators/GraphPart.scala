@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.storage.StorageLevel
 
 /** Size-adaptive partitioning for the iterative RDD operators (Hits,
   * PageRank, LabelPropagation, Hierarchy, Bfs) — guide §2.2: fewer,
@@ -25,23 +24,20 @@ import org.apache.spark.storage.StorageLevel
   * knob — production values in OPTIMIZATION_r18.md.
   *
   * The count that sizes the partitioner doubles as the cache-fill of
-  * `raw` (persisted here; callers retire it with their other round
-  * frames) — operators that previously evaluated their edge-synthesis
-  * plan once per derived RDD (Hits: eSrc AND eDst) now evaluate it
-  * exactly once.
+  * `raw` (cached in the caller's scope) — operators that previously
+  * evaluated their edge-synthesis plan once per derived RDD (Hits:
+  * eSrc AND eDst) now evaluate it exactly once.
   */
 object GraphPart {
 
   val DefaultRowsPerPartition = 4000000L
 
-  /** Persist `raw` (MEMORY_AND_DISK), count it, and return the count
-    * with a partitioner sized rows-per-partition, capped at `raw`'s
-    * own partition count. The caller owns unpersisting `raw` once its
-    * partitioned copies are materialized.
+  /** Cache `raw` in `scope`, count it, and return the count with a
+    * partitioner sized rows-per-partition, capped at `raw`'s own
+    * partition count.
     */
-  def sized[T](raw: RDD[T]): (Long, HashPartitioner) = {
-    raw.persist(StorageLevel.MEMORY_AND_DISK)
-    val n = raw.count()
+  def sized[T](raw: RDD[T], scope: graft.Exec.Scope): (Long, HashPartitioner) = {
+    val n = scope.cache(raw).count()
     val rowsPer = SparkSession.getActiveSession
       .flatMap(_.conf.getOption("spark.graft.graph.rowsPerPartition"))
       .map(_.toLong).getOrElse(DefaultRowsPerPartition)

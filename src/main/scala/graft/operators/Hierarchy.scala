@@ -4,7 +4,6 @@ import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Hierarchical rollup over a DAG — BOM explosion (bill-of-
   * materials), org-chart descendant totals, dependency-cost
@@ -43,7 +42,7 @@ import org.apache.spark.storage.StorageLevel
   * amortize: round COUNT scales with graph depth while per-round
   * data is frontier-scale, which is exactly why Spark's own graph
   * engine (GraphX/Pregel) is RDD-based. The RDD loop instead:
-  *  - hash-partitions the de-duplicated edge table ONCE and persists
+  *  - hash-partitions the de-duplicated edge table ONCE and caches
   *    it (MEMORY_AND_DISK — spill-safe at scale); every frontier /
   *    level / totals RDD uses the SAME partitioner, so every
   *    per-round join is co-partitioned and NARROW — no edge shuffle,
@@ -53,17 +52,23 @@ import org.apache.spark.storage.StorageLevel
   *  - phase 1 runs one tiny job per round (the fixpoint count);
   *    phase 2 runs NO per-level job — the sweep is lazy and
   *    materializes inside the single result job, with a lineage-
-  *    cutting probe every `eagerStride` levels (persisted-but-
+  *    cutting probe every `EagerStride` levels (cached-but-
   *    unmaterialized narrow chains recurse task-side; ~8 levels of
   *    depth per stack frame batch is safe where 200 overflows);
-  *  - every intermediate persist is tracked and unpersisted on exit
-  *    (the pre-r13 DataFrame code leaked ~14 localCheckpoint block
-  *    sets per call for the session's lifetime — compounding across
-  *    a 160-query bench suite into exactly the monotone cross-round
+  *  - every intermediate lives in one Exec scope, freed on exit (the
+  *    pre-r13 DataFrame code leaked ~14 localCheckpoint block sets
+  *    per call for the session's lifetime — compounding across a
+  *    160-query bench suite into exactly the monotone cross-round
   *    drift the r12 verdict flagged); the caller receives one
   *    eagerly-checkpointed DataFrame and nothing else stays behind.
   */
 object Hierarchy {
+
+  /** Phase-1 rounds between fixpoint checks (1 = check every round). */
+  private val CheckStride = 3
+
+  /** Phase-2 levels between forced lineage cuts of the carry. */
+  private val EagerStride = 8
 
   /** All three columns must be INTEGRAL types (byte/short/int/long)
     * — ids join as longs and quantities sum as longs. Validated up
@@ -99,159 +104,132 @@ object Hierarchy {
       maxIter: Int = 50): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val dbg = sys.env.contains("SPARK_GRAFT_HIERARCHY_DEBUG")
-    val t00 = System.nanoTime()
-    def mark(tag: String): Unit =
-      if (dbg) System.err.println(f"[hier] $tag at ${(System.nanoTime() - t00) / 1e9}%.2f s")
-    val eagerStride = 8
-    val retired = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
-    def track[T](rdd: RDD[T]): RDD[T] = {
-      retired += rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      rdd
-    }
-    // Caching does NOT truncate lineage — task serialization walks
-    // the full dependency object graph, so per-round RDDs are
-    // localCheckpoint-MARKED (lineage cut when first materialized)
-    // and a stride count forces materialization on deep BOMs before
-    // the graph can overflow the serializer's stack.
-    def trackCut[T](rdd: RDD[T]): RDD[T] = {
-      retired += rdd.localCheckpoint()
-      rdd
-    }
-
     requireIntegral(edges, parentCol, "parent id")
     requireIntegral(edges, childCol, "child id")
     requireIntegral(edges, qtyCol, "quantity")
-    val raw = edges.select(
-        col(parentCol).cast("long"), col(childCol).cast("long"), col(qtyCol).cast("long"))
-      .na.drop()
-      .rdd.map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2)))
-    // r18: size-adaptive partitioner (GraphPart — guide §2.2); the
-    // sizing count also caches raw, evaluated once for the e build
-    val (_, part) = GraphPart.sized(raw)
-    retired += raw
-    // parallel edges summed once, then co-located by parent for the
-    // per-round narrow joins
-    val e = track(raw.reduceByKey(_ + _)
-      .map { case ((p, c), q) => (p, (c, q)) }
-      .partitionBy(part))
+    graft.Exec.scoped { b =>
+      val raw = edges.select(
+          col(parentCol).cast("long"), col(childCol).cast("long"), col(qtyCol).cast("long"))
+        .na.drop()
+        .rdd.map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2)))
+      // r18: size-adaptive partitioner (GraphPart — guide §2.2); the
+      // sizing count also caches raw, evaluated once for the e build
+      val (_, part) = GraphPart.sized(raw, b)
+      // parallel edges summed once, then co-located by parent for the
+      // per-round narrow joins
+      val e = b.cache(raw.reduceByKey(_ + _)
+        .map { case ((p, c), q) => (p, (c, q)) }
+        .partitionBy(part))
 
-    // Phase 1: levels by worklist longest-path propagation. Each
-    // round joins the frontier (nodes whose level just improved)
-    // against the co-partitioned edges — narrow — then one
-    // frontier-scale reduceByKey(max) and a narrow merge into the
-    // level table. Improvements reach a fixpoint in ≤ depth rounds
-    // on a DAG; a cycle improves forever → fail fast.
-    var levels: RDD[(Long, Long)] =
-      track(spark.sparkContext.parallelize(Seq((rootId, 0L))).partitionBy(part))
-    var frontier = levels
-    var round = 0
-    var changed = 1L
-    // r17: the fixpoint count is checked every `checkStride` rounds,
-    // not every round — each count() is a full driver job whose launch
-    // latency dominates at frontier scale (guide §1.2: round count
-    // scales with depth, so per-round fixed cost is the lever).
-    // Correctness: an empty frontier stays empty (prop of an empty
-    // frontier is empty), so improvements cannot resume after a zero —
-    // checking late never misses a change, it only runs ≤ stride-1
-    // no-op rounds past the fixpoint (narrow empty stages). Each check
-    // also materializes the batch, bounding task-side lineage depth
-    // like the old per-round count did. Conf-exposed (r18) so the
-    // stride is A/B-able and cluster-tunable; 1 = the r16 per-round
-    // check.
-    val checkStride = spark.conf
-      .getOption("spark.graft.hierarchy.checkStride").map(_.toInt).getOrElse(3)
-    require(checkStride >= 1, s"checkStride must be >= 1: $checkStride")
-    while (changed > 0 && round < maxIter) {
-      round += 1
-      val prop = e.join(frontier)
-        .map { case (_, ((c, _), lv)) => (c, lv + 1L) }
-        .reduceByKey(part, math.max(_: Long, _: Long))
-      val improved = trackCut(prop.leftOuterJoin(levels)
-        .filter { case (_, (nl, ol)) => ol.forall(nl > _) }
-        .mapValues(_._1))
-      levels = trackCut(levels.fullOuterJoin(improved).mapValues {
-        case (ol, nl) => math.max(ol.getOrElse(Long.MinValue), nl.getOrElse(Long.MinValue))
-      })
-      frontier = improved
-      if (round % checkStride == 0 || round >= maxIter) {
-        // r18 (verdict item 7): the fixpoint probe and the lineage cut
-        // are independent jobs — submit the probe async so the levels
-        // job rides its idle tail instead of queuing behind it (guide
-        // §2.6, overlap independent jobs). `levels` counts a superset
-        // snapshot, so running it before `changed` is known wastes
-        // nothing: it must materialize either way unless the fixpoint
-        // landed exactly on this boundary (rare; one extra narrow
-        // single-partition job then).
-        //
-        // LINEAGE-CUT CONTRACT (HierarchySpec depth-200 pins it): a
-        // localCheckpoint MARK truncates only when `rdd.doCheckpoint()`
-        // runs, and only SYNC actions call it (SparkContext.runJob
-        // does; submitJob/countAsync does NOT — the first r18 cut of
-        // this block used two countAsync and never truncated anything,
-        // overflowing the task serializer at depth 200). So: `levels`
-        // is counted sync (its runJob truncates it — nothing running
-        // references levels_k, so the mutation races no serializer),
-        // and `improved` gets a second sync count once its async probe
-        // is done — a cache-read job (the async run persisted its
-        // blocks) whose runJob performs improved's truncation.
-        val changedF = improved.countAsync()
-        levels.count() // overlapped with the probe; truncates levels
-        changed = changedF.get()
-        mark(s"p1 round $round changed=$changed")
-        if (changed > 0) improved.count() // cache-read; truncates improved
-        ()
+      // Phase 1: levels by worklist longest-path propagation. Each
+      // round joins the frontier (nodes whose level just improved)
+      // against the co-partitioned edges — narrow — then one
+      // frontier-scale reduceByKey(max) and a narrow merge into the
+      // level table. Improvements reach a fixpoint in ≤ depth rounds
+      // on a DAG; a cycle improves forever → fail fast.
+      //
+      // Caching does NOT truncate lineage — task serialization walks
+      // the full dependency object graph, so per-round RDDs are lazy
+      // cuts (truncated when first materialized by a sync action) and
+      // the stride counts force materialization on deep BOMs before the
+      // graph can overflow the serializer's stack.
+      var levels: RDD[(Long, Long)] =
+        b.cache(spark.sparkContext.parallelize(Seq((rootId, 0L))).partitionBy(part))
+      var frontier = levels
+      var round = 0
+      var changed = 1L
+      // r17: the fixpoint count is checked every `CheckStride` rounds,
+      // not every round — each count() is a full driver job whose launch
+      // latency dominates at frontier scale (guide §1.2: round count
+      // scales with depth, so per-round fixed cost is the lever).
+      // Correctness: an empty frontier stays empty (prop of an empty
+      // frontier is empty), so improvements cannot resume after a zero —
+      // checking late never misses a change, it only runs ≤ stride-1
+      // no-op rounds past the fixpoint (narrow empty stages). Each check
+      // also materializes the batch, bounding task-side lineage depth
+      // like the old per-round count did.
+      while (changed > 0 && round < maxIter) {
+        round += 1
+        val prop = e.join(frontier)
+          .map { case (_, ((c, _), lv)) => (c, lv + 1L) }
+          .reduceByKey(part, math.max(_: Long, _: Long))
+        val improved = b.cut(prop.leftOuterJoin(levels)
+          .filter { case (_, (nl, ol)) => ol.forall(nl > _) }
+          .mapValues(_._1))
+        levels = b.cut(levels.fullOuterJoin(improved).mapValues {
+          case (ol, nl) => math.max(ol.getOrElse(Long.MinValue), nl.getOrElse(Long.MinValue))
+        })
+        frontier = improved
+        if (round % CheckStride == 0 || round >= maxIter) {
+          // r18 (verdict item 7): the fixpoint probe and the lineage cut
+          // are independent jobs — submit the probe async so the levels
+          // job rides its idle tail instead of queuing behind it (guide
+          // §2.6, overlap independent jobs). `levels` counts a superset
+          // snapshot, so running it before `changed` is known wastes
+          // nothing: it must materialize either way unless the fixpoint
+          // landed exactly on this boundary (rare; one extra narrow
+          // single-partition job then).
+          //
+          // LINEAGE-CUT CONTRACT (HierarchySpec depth-200 pins it): a
+          // lazy cut's checkpoint MARK truncates only when `rdd.doCheckpoint()`
+          // runs, and only SYNC actions call it (SparkContext.runJob
+          // does; submitJob/countAsync does NOT — the first r18 cut of
+          // this block used two countAsync and never truncated anything,
+          // overflowing the task serializer at depth 200). So: `levels`
+          // is counted sync (its runJob truncates it — nothing running
+          // references levels_k, so the mutation races no serializer),
+          // and `improved` gets a second sync count once its async probe
+          // is done — a cache-read job (the async run persisted its
+          // blocks) whose runJob performs improved's truncation.
+          val changedF = improved.countAsync()
+          levels.count() // overlapped with the probe; truncates levels
+          changed = changedF.get()
+          if (changed > 0) improved.count() // cache-read; truncates improved
+          ()
+        }
       }
-    }
-    if (changed > 0) {
-      retired.foreach(_.unpersist(blocking = false))
-      throw new IllegalStateException(
-        s"levels did not settle in $maxIter rounds — cycle reachable from $rootId?")
-    }
+      if (changed > 0)
+        throw new IllegalStateException(
+          s"levels did not settle in $maxIter rounds — cycle reachable from $rootId?")
 
-    // Phase 2: sweep levels ascending with NO per-level driver
-    // action. Every contribution knows its target's level at
-    // creation via eLv (edges annotated with the child's settled
-    // level, built once), so a settled level's rows leave the
-    // carry. All per-level RDDs are persisted and materialize inside
-    // the one result job; a stride probe bounds task-side recursion
-    // on deep BOMs.
-    val depth = levels.map(_._2).fold(0L)(math.max)
-    mark(s"p1 done depth=$depth")
-    val eLv = track(e
-      .map { case (p, (c, q)) => (c, (p, q)) }
-      .join(levels, part)
-      .map { case (c, ((p, q), lv)) => (p, (c, q, lv)) }
-      .partitionBy(part))
-    var done: RDD[(Long, Long)] = // id -> total for the level just settled
-      track(spark.sparkContext.parallelize(Seq((rootId, 1L))).partitionBy(part))
-    val settledByLevel = scala.collection.mutable.ArrayBuffer((0L, done))
-    // contributions (child -> (child_level, partial)) to levels not yet settled
-    var carry: RDD[(Long, (Long, Long))] =
-      spark.sparkContext.emptyRDD[(Long, (Long, Long))]
-    for (l <- 1L to depth) {
-      val contrib = eLv.join(done) // narrow: both sides on `part`
-        .map { case (_, ((c, q, lvc), v)) => (c, (lvc, v * q)) }
-      val all = carry.union(contrib)
-      val settled = trackCut(all.filter(_._2._1 == l)
-        .mapValues(_._2).reduceByKey(part, _ + _))
-      carry = trackCut(all.filter(_._2._1 > l))
-      done = settled
-      settledByLevel += ((l, settled))
-      if (l % eagerStride == 0 && l < depth) carry.count() // force the lineage cut
-    }
+      // Phase 2: sweep levels ascending with NO per-level driver
+      // action. Every contribution knows its target's level at
+      // creation via eLv (edges annotated with the child's settled
+      // level, built once), so a settled level's rows leave the
+      // carry. All per-level RDDs are cut lazily and materialize inside
+      // the one result job; a stride probe bounds task-side recursion
+      // on deep BOMs.
+      val depth = levels.map(_._2).fold(0L)(math.max)
+      val eLv = b.cache(e
+        .map { case (p, (c, q)) => (c, (p, q)) }
+        .join(levels, part)
+        .map { case (c, ((p, q), lv)) => (p, (c, q, lv)) }
+        .partitionBy(part))
+      var done: RDD[(Long, Long)] = // id -> total for the level just settled
+        b.cache(spark.sparkContext.parallelize(Seq((rootId, 1L))).partitionBy(part))
+      val settledByLevel = scala.collection.mutable.ArrayBuffer((0L, done))
+      // contributions (child -> (child_level, partial)) to levels not yet settled
+      var carry: RDD[(Long, (Long, Long))] =
+        spark.sparkContext.emptyRDD[(Long, (Long, Long))]
+      for (l <- 1L to depth) {
+        val contrib = eLv.join(done) // narrow: both sides on `part`
+          .map { case (_, ((c, q, lvc), v)) => (c, (lvc, v * q)) }
+        val all = carry.union(contrib)
+        val settled = b.cut(all.filter(_._2._1 == l)
+          .mapValues(_._2).reduceByKey(part, _ + _))
+        carry = b.cut(all.filter(_._2._1 > l))
+        done = settled
+        settledByLevel += ((l, settled))
+        if (l % EagerStride == 0 && l < depth) carry.count() // force the lineage cut
+      }
 
-    // The ONE eager job: materializes the sweep, then every
-    // intermediate block set is released — nothing outlives the call
-    // except the caller's checkpointed result.
-    val result = spark.createDataset(
-        spark.sparkContext.union(settledByLevel.toSeq.map {
-          case (lv, rdd) => rdd.map { case (id, v) => (id, lv, v) }
-        }))
-      .toDF("node", "level", "total_qty")
-      .localCheckpoint()
-    mark("result ckpt")
-    retired.foreach(_.unpersist(blocking = false))
-    result
+      // The ONE eager job: materializes the sweep; the scope then frees
+      // every intermediate block set.
+      b.cut(spark.createDataset(
+          spark.sparkContext.union(settledByLevel.toSeq.map {
+            case (lv, rdd) => rdd.map { case (id, v) => (id, lv, v) }
+          }))
+        .toDF("node", "level", "total_qty"))
+    }
   }
 }

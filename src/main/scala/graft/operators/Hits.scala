@@ -4,7 +4,6 @@ import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** HITS (Kleinberg 1999) hubs-and-authorities over a directed edge
   * list — the second classic link-analysis prior next to PageRank:
@@ -41,8 +40,8 @@ import org.apache.spark.storage.StorageLevel
   * score vectors, so both per-round joins are NARROW; the two wide
   * ops per round are the fan-in reduceByKeys (hub mass → dst,
   * authority mass → src) that ARE the algorithm. Driver touch per
-  * round = two scalar max folds (never a collect). Round frames
-  * localCheckpoint + freed on exit; a DataFrame loop would pay the
+  * round = two scalar max folds (never a collect). Round frames are
+  * lazy lineage cuts; a DataFrame loop would pay the
   * ~0.5 s/round Catalyst replan tax (the q117 adjudication).
   *
   * Overflow contract: araw ≤ maxInDeg·scale, and the rescale
@@ -62,80 +61,65 @@ object Hits {
     require(scale > 0, s"scale must be positive: $scale")
     val spark = edges.sparkSession
     import spark.implicits._
-    val retired = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
-    val raw = edges.select(col(srcCol).cast("long"), col(dstCol).cast("long")).na.drop()
-      .rdd.map(r => (r.getLong(0), r.getLong(1)))
-    // r18: size-adaptive partitioner (GraphPart — guide §2.2); the
-    // sizing count also caches raw, so the caller's edge-synthesis
-    // plan evaluates ONCE (eSrc and eDst previously re-ran it each)
-    val (_, part) = GraphPart.sized(raw)
-    retired += raw
-    // the edge list twice: keyed by src for the authority fan-in's
-    // hub join, keyed by dst for the hub fan-in's authority join —
-    // both partitioned ONCE, so every per-round join is narrow
-    val eSrc = raw.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-    val eDst = raw.map(_.swap).partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-    retired += eSrc; retired += eDst
-    val nodes = eSrc.flatMap { case (s, d) => Iterator((s, ()), (d, ())) }
-      .reduceByKey(part, (a, _) => a).persist(StorageLevel.MEMORY_AND_DISK)
-    retired += nodes
-    val n = nodes.count()
-    require(n > 0, "empty graph: edge list has no nodes")
-    val outDeg = eSrc.mapValues(_ => 1L).reduceByKey(part, _ + _)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val inDeg = eDst.mapValues(_ => 1L).reduceByKey(part, _ + _)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    retired += outDeg; retired += inDeg
-    val maxDeg = math.max(outDeg.map(_._2).fold(0L)(math.max),
-      inDeg.map(_._2).fold(0L)(math.max))
-    require(BigInt(maxDeg) * BigInt(scale) * BigInt(scale) <= BigInt(Long.MaxValue),
-      s"maxDeg*scale^2 overflows long (maxDeg=$maxDeg, scale=$scale) — lower scale")
+    graft.Exec.scoped { b =>
+      val raw = edges.select(col(srcCol).cast("long"), col(dstCol).cast("long")).na.drop()
+        .rdd.map(r => (r.getLong(0), r.getLong(1)))
+      // r18: size-adaptive partitioner (GraphPart — guide §2.2); the
+      // sizing count also caches raw, so the caller's edge-synthesis
+      // plan evaluates ONCE (eSrc and eDst previously re-ran it each)
+      val (_, part) = GraphPart.sized(raw, b)
+      // the edge list twice: keyed by src for the authority fan-in's
+      // hub join, keyed by dst for the hub fan-in's authority join —
+      // both partitioned ONCE, so every per-round join is narrow
+      val eSrc = b.cache(raw.partitionBy(part))
+      val eDst = b.cache(raw.map(_.swap).partitionBy(part))
+      val nodes = b.cache(eSrc.flatMap { case (s, d) => Iterator((s, ()), (d, ())) }
+        .reduceByKey(part, (a, _) => a))
+      val n = nodes.count()
+      require(n > 0, "empty graph: edge list has no nodes")
+      val outDeg = b.cache(eSrc.mapValues(_ => 1L).reduceByKey(part, _ + _))
+      val inDeg = b.cache(eDst.mapValues(_ => 1L).reduceByKey(part, _ + _))
+      val maxDeg = math.max(outDeg.map(_._2).fold(0L)(math.max),
+        inDeg.map(_._2).fold(0L)(math.max))
+      require(BigInt(maxDeg) * BigInt(scale) * BigInt(scale) <= BigInt(Long.MaxValue),
+        s"maxDeg*scale^2 overflows long (maxDeg=$maxDeg, scale=$scale) — lower scale")
 
-    // h starts at scale on EVERY node; a exists only where in-edges do
-    var h: RDD[(Long, Long)] = nodes.mapValues(_ => scale)
-    h.localCheckpoint()
-    retired += h
-    var a: RDD[(Long, Long)] = null
-    var i = 0
-    while (i < iters) {
-      // authority update: hub mass fans in over out-edges.
-      // eSrc.join(h) is narrow only while h spans every src — true:
-      // h is rebuilt on the full node universe below.
-      val araw = eSrc.join(h) // narrow: both on `part`
-        .map { case (_, (dst, hv)) => (dst, hv) }
-        .reduceByKey(part, _ + _) // wide shuffle #1
-      val maxA = araw.map(_._2).fold(0L)(math.max) // driver scalar
-      val aNext = if (maxA == 0L) araw.mapValues(_ => 0L)
-        else araw.mapValues(v => v * scale / maxA)
-      aNext.localCheckpoint()
-      retired += aNext
-      a = aNext
-      // hub update: authority mass fans in over in-edges. aNext keys
-      // are exactly the dst side, so the eDst inner join loses nothing.
-      val hraw = eDst.join(aNext) // narrow: both on `part`
-        .map { case (_, (src, av)) => (src, av) }
-        .reduceByKey(part, _ + _) // wide shuffle #2
-      val maxH = hraw.map(_._2).fold(0L)(math.max) // driver scalar
-      val hScored = if (maxH == 0L) hraw.mapValues(_ => 0L)
-        else hraw.mapValues(v => v * scale / maxH)
-      // rebuild on the node universe so next round's eSrc join stays
-      // an inner join over every src (no-out nodes carry hub 0)
-      val hNext = nodes.leftOuterJoin(hScored) // narrow
-        .mapValues { case (_, hv) => hv.getOrElse(0L) }
-      hNext.localCheckpoint()
-      retired += hNext
-      h = hNext
-      i += 1
+      // h starts at scale on EVERY node; a exists only where in-edges do
+      var h: RDD[(Long, Long)] = b.cut(nodes.mapValues(_ => scale))
+      var a: RDD[(Long, Long)] = null
+      var i = 0
+      while (i < iters) {
+        // authority update: hub mass fans in over out-edges.
+        // eSrc.join(h) is narrow only while h spans every src — true:
+        // h is rebuilt on the full node universe below.
+        val araw = eSrc.join(h) // narrow: both on `part`
+          .map { case (_, (dst, hv)) => (dst, hv) }
+          .reduceByKey(part, _ + _) // wide shuffle #1
+        val maxA = araw.map(_._2).fold(0L)(math.max) // driver scalar
+        val aNext = b.cut(if (maxA == 0L) araw.mapValues(_ => 0L)
+          else araw.mapValues(v => v * scale / maxA))
+        a = aNext
+        // hub update: authority mass fans in over in-edges. aNext keys
+        // are exactly the dst side, so the eDst inner join loses nothing.
+        val hraw = eDst.join(aNext) // narrow: both on `part`
+          .map { case (_, (src, av)) => (src, av) }
+          .reduceByKey(part, _ + _) // wide shuffle #2
+        val maxH = hraw.map(_._2).fold(0L)(math.max) // driver scalar
+        val hScored = if (maxH == 0L) hraw.mapValues(_ => 0L)
+          else hraw.mapValues(v => v * scale / maxH)
+        // rebuild on the node universe so next round's eSrc join stays
+        // an inner join over every src (no-out nodes carry hub 0)
+        h = b.cut(nodes.leftOuterJoin(hScored) // narrow
+          .mapValues { case (_, hv) => hv.getOrElse(0L) })
+        i += 1
+      }
+      b.cut(spark.createDataset(
+        nodes.leftOuterJoin(h).mapValues { case (_, hv) => hv.getOrElse(0L) }
+          .leftOuterJoin(a).mapValues { case (hv, av) => (hv, av.getOrElse(0L)) }
+          .leftOuterJoin(outDeg).mapValues { case ((hv, av), od) => (hv, av, od.getOrElse(0L)) }
+          .leftOuterJoin(inDeg)
+          .map { case (id, ((hv, av, od), idg)) => (id, hv, av, od, idg.getOrElse(0L)) })
+        .toDF("id", "hub_scaled", "auth_scaled", "out_degree", "in_degree"))
     }
-    val result = spark.createDataset(
-      nodes.leftOuterJoin(h).mapValues { case (_, hv) => hv.getOrElse(0L) }
-        .leftOuterJoin(a).mapValues { case (hv, av) => (hv, av.getOrElse(0L)) }
-        .leftOuterJoin(outDeg).mapValues { case ((hv, av), od) => (hv, av, od.getOrElse(0L)) }
-        .leftOuterJoin(inDeg)
-        .map { case (id, ((hv, av, od), idg)) => (id, hv, av, od, idg.getOrElse(0L)) })
-      .toDF("id", "hub_scaled", "auth_scaled", "out_degree", "in_degree")
-      .localCheckpoint() // one block set survives: the caller's
-    retired.foreach(_.unpersist(blocking = false))
-    result
   }
 }

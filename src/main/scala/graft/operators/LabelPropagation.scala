@@ -4,7 +4,6 @@ import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Label propagation community detection (Raghavan et al. 2007) —
   * the third whole-graph operator family next to ConnectedComponents
@@ -33,7 +32,7 @@ import org.apache.spark.storage.StorageLevel
   * shuffles that never materialize a neighborhood in memory (a hub's
   * votes aggregate distributively; no collect_list of neighbors
   * anywhere). Driver touch per round: none (no scalar folds needed).
-  * Round frames localCheckpoint + freed on exit.
+  * Round frames are lazy lineage cuts.
   */
 object LabelPropagation {
 
@@ -56,52 +55,41 @@ object LabelPropagation {
     }
     requireIntegral(srcCol, "edge source")
     requireIntegral(dstCol, "edge destination")
-    val retired = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
-    val raw = edges.select(col(srcCol).cast("long"), col(dstCol).cast("long")).na.drop()
-      .rdd.map(r => (r.getLong(0), r.getLong(1)))
-    // r18: size-adaptive partitioner (GraphPart — guide §2.2); the
-    // sizing count also caches raw, evaluated once
-    val (_, part) = GraphPart.sized(raw)
-    retired += raw
-    // undirected view keyed by the VOTING endpoint: (voter, receiver)
-    // for both directions of every edge — partitioned once
-    val und = raw.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-      .partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-    retired += und
-    val nodes = und.mapValues(_ => ()).reduceByKey(part, (a, _) => a)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    retired += nodes
-    require(!nodes.isEmpty(), "empty graph: edge list has no nodes")
+    graft.Exec.scoped { b =>
+      val raw = edges.select(col(srcCol).cast("long"), col(dstCol).cast("long")).na.drop()
+        .rdd.map(r => (r.getLong(0), r.getLong(1)))
+      // r18: size-adaptive partitioner (GraphPart — guide §2.2); the
+      // sizing count also caches raw, evaluated once
+      val (_, part) = GraphPart.sized(raw, b)
+      // undirected view keyed by the VOTING endpoint: (voter, receiver)
+      // for both directions of every edge — partitioned once
+      val und = b.cache(raw.flatMap { case (x, y) => Iterator((x, y), (y, x)) }
+        .partitionBy(part))
+      val nodes = b.cache(und.mapValues(_ => ()).reduceByKey(part, (a, _) => a))
+      require(!nodes.isEmpty(), "empty graph: edge list has no nodes")
 
-    var labels: RDD[(Long, Long)] = nodes.map { case (id, _) => (id, id) }
-      .partitionBy(part)
-    labels.localCheckpoint()
-    retired += labels
-    var i = 0
-    while (i < iters) {
-      val votes = und.join(labels) // narrow: both on `part`
-        .map { case (_, (receiver, voterLabel)) => ((receiver, voterLabel), 1L) }
-        .reduceByKey(_ + _) // wide #1: distributive count, hub-safe
-      val next = votes
-        .map { case ((node, label), c) => (node, (label, c)) }
-        .reduceByKey(part, { (x: (Long, Long), y: (Long, Long)) =>
-          // argmax: count desc, then SMALLEST label — associative and
-          // commutative, so map-side combine is sound
-          if (x._2 > y._2) x
-          else if (y._2 > x._2) y
-          else if (x._1 <= y._1) x else y
-        }) // wide #2, lands back on `part`
-        .mapValues(_._1)
-      next.localCheckpoint()
-      retired += next
-      labels = next
-      i += 1
+      var labels: RDD[(Long, Long)] = b.cut(nodes.map { case (id, _) => (id, id) }
+        .partitionBy(part))
+      var i = 0
+      while (i < iters) {
+        val votes = und.join(labels) // narrow: both on `part`
+          .map { case (_, (receiver, voterLabel)) => ((receiver, voterLabel), 1L) }
+          .reduceByKey(_ + _) // wide #1: distributive count, hub-safe
+        labels = b.cut(votes
+          .map { case ((node, label), c) => (node, (label, c)) }
+          .reduceByKey(part, { (x: (Long, Long), y: (Long, Long)) =>
+            // argmax: count desc, then SMALLEST label — associative and
+            // commutative, so map-side combine is sound
+            if (x._2 > y._2) x
+            else if (y._2 > x._2) y
+            else if (x._1 <= y._1) x else y
+          }) // wide #2, lands back on `part`
+          .mapValues(_._1))
+        i += 1
+      }
+      b.cut(spark.createDataset(labels.map { case (id, l) => (id, l) })
+        .toDF("id", "label"))
     }
-    val result = spark.createDataset(labels.map { case (id, l) => (id, l) })
-      .toDF("id", "label")
-      .localCheckpoint() // one block set survives: the caller's
-    retired.foreach(_.unpersist(blocking = false))
-    result
   }
 
   /** EXACT MODULARITY of a community assignment over the undirected
@@ -144,13 +132,12 @@ object LabelPropagation {
     // re-runs the whole join/aggregate subtree (measured: the
     // double evaluation was ~half of q184's cost at bench scale, and
     // at 100 TB it would be a second full pass over the edge joins).
-    // The frame is bounded — one row per community — so an eager
-    // localCheckpoint is model-sized.
-    val perComm = dc.join(ec, Seq("label"), "left")
+    // The frame is bounded — one row per community — so an eager cut
+    // is model-sized.
+    val perComm = graft.Exec.scoped(_.cut(dc.join(ec, Seq("label"), "left")
       .select(col("label"), col("size"), col("degree_sum"),
         coalesce(col("intra_edges"), lit(0L)).as("intra_edges"))
-      .crossJoin(broadcast(mRow))
-      .localCheckpoint(true)
+      .crossJoin(broadcast(mRow))))
     val qnumRow = perComm.agg(
       sum(lit(4).cast(d) * col("_m").cast(d) * col("intra_edges").cast(d) -
         col("degree_sum").cast(d) * col("degree_sum").cast(d)).as("_qnum"))

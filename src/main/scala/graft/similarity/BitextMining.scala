@@ -68,7 +68,9 @@ object BitextMining {
       .withColumn("d", GraphAnn.intDist(col("_qa"), col("_qb")))
       .select(col("src_id"), col("tgt_id"), col("d"))
       .dropDuplicates("src_id", "tgt_id")
-    graft.Exec.withCached(cand0) { cand =>
+    graft.Exec.scoped { b =>
+      val cand = b.cache(cand0)
+      cand.count() // fill once before the branches race
       // k-NN pools on each side: the margin's denominator evidence
       def pool(keyCol: String, outId: String, outN: String, outSum: String) = {
         val w = Window.partitionBy(col(keyCol))
@@ -85,13 +87,13 @@ object BitextMining {
         Window.partitionBy(col("src_id")).orderBy(col("d"), col("tgt_id"))))
         .filter(col("_r") === 1)
         .drop("_r")
-      best.join(srcPool, Seq("src_id"))
+      b.cut(best.join(srcPool, Seq("src_id"))
         .join(tgtPool, Seq("tgt_id"))
         .select(col("src_id"), col("tgt_id"), col("d").as("dist"),
           (col("_na") + col("_nb")).as("nn_n"),
           (col("_sa") + col("_sb")).as("nn_sum"),
           (col("d") * (col("_na") + col("_nb")) * marginPct <
-            (col("_sa") + col("_sb")) * 100L).as("selected"))
+            (col("_sa") + col("_sb")) * 100L).as("selected")))
     }
   }
 }

@@ -273,76 +273,66 @@ object GraphAnn {
       math.max(nv.getNumPartitions, spark.sparkContext.defaultParallelism),
       ((n + 59999L) / 60000L).toInt))
     val nPart = new org.apache.spark.HashPartitioner(nParts)
-    val retired = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    val nvP = nv.partitionBy(nPart)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    retired += nvP
-    val adj = edges.select(col("src").cast("long"), col("dst").cast("long")).rdd
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .aggregateByKey(new scala.collection.mutable.ArrayBuffer[Long], nPart)(
-        (b, d) => { b += d; b }, (a, b) => { a ++= b; a })
-      .mapValues(_.toArray)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    retired += adj
-    // entry tier: the level == maxLevel nodes (expected n/4^maxLevel —
-    // the broadcastable top of the hierarchy), sorted for determinism
-    val entries = nvP.filter { case (id, _) => entryLevelHit(id, maxLevel) }
-      .collect().sortBy(_._1)
-    val entriesB = spark.sparkContext.broadcast(entries)
-    // query-side state is (entryBeam + rounds·beam·degree) rows per
-    // query — scale its layout with the corpus layout (queries are
-    // ≤ corpus by contract; a caller with a huge query set passes
-    // pre-partitioned queries and the cap keeps that parallelism)
-    val qPart = new org.apache.spark.HashPartitioner(
-      math.max(1, math.min(math.max(qv.getNumPartitions, 1), nParts)))
-    // per-query state: (query vector, visited (dist, nid) sorted asc)
-    var visited: org.apache.spark.rdd.RDD[(Long, (Array[Long], Array[(Long, Long)]))] =
-      qv.partitionBy(qPart).mapValues { qvec =>
-        val top = entriesB.value
-          .map { case (nid, nvec) => (sseJvm(qvec, nvec), nid) }
-          .sorted.take(entryBeam)
-        (qvec, top)
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    retired += visited
-    var r = 0
-    while (r < rounds) {
-      val front = visited.flatMap { case (qid, (_, arr)) =>
-        arr.iterator.take(beam).map { case (_, nid) => (nid, qid) } }
-      val cand = front.partitionBy(nPart)
-        .join(adj) // narrow: both on nPart
-        .flatMap { case (_, (qid, dsts)) => dsts.iterator.map(d => (d, qid)) }
-        .partitionBy(nPart)
-        .mapPartitions({ it =>
-          // global (dst, qid) dedupe: keyed by dst, so equal pairs
-          // land in one partition — dedupe before the vector fetch
-          val seen = scala.collection.mutable.HashSet.empty[(Long, Long)]
-          it.filter(seen.add)
-        }, preservesPartitioning = true)
-        .join(nvP) // narrow: (dst, (qid, nvec))
-        .map { case (nid, (qid, nvec)) => (qid, (nid, nvec)) }
-      val next = visited.cogroup(cand, qPart).flatMap { case (qid, (oldIt, newIt)) =>
-        oldIt.headOption.map { case (qvec, arr) =>
-          val m = scala.collection.mutable.LongMap.empty[Long] // nid -> d
-          arr.foreach { case (d, nid) => m(nid) = d }
-          newIt.foreach { case (nid, nvec) =>
-            if (!m.contains(nid)) m(nid) = sseJvm(qvec, nvec) }
-          (qid, (qvec, m.iterator.map { case (nid, d) => (d, nid) }.toArray.sorted))
-        }
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      retired += next
-      visited = next
-      r += 1
+    graft.Exec.scoped { sc =>
+      val nvP = sc.cache(nv.partitionBy(nPart))
+      val adj = sc.cache(edges.select(col("src").cast("long"), col("dst").cast("long")).rdd
+        .map(r => (r.getLong(0), r.getLong(1)))
+        .aggregateByKey(new scala.collection.mutable.ArrayBuffer[Long], nPart)(
+          (b, d) => { b += d; b }, (a, b) => { a ++= b; a })
+        .mapValues(_.toArray))
+      // entry tier: the level == maxLevel nodes (expected n/4^maxLevel —
+      // the broadcastable top of the hierarchy), sorted for determinism
+      val entries = nvP.filter { case (id, _) => entryLevelHit(id, maxLevel) }
+        .collect().sortBy(_._1)
+      val entriesB = spark.sparkContext.broadcast(entries)
+      // query-side state is (entryBeam + rounds·beam·degree) rows per
+      // query — scale its layout with the corpus layout (queries are
+      // ≤ corpus by contract; a caller with a huge query set passes
+      // pre-partitioned queries and the cap keeps that parallelism)
+      val qPart = new org.apache.spark.HashPartitioner(
+        math.max(1, math.min(math.max(qv.getNumPartitions, 1), nParts)))
+      // per-query state: (query vector, visited (dist, nid) sorted asc)
+      var visited: org.apache.spark.rdd.RDD[(Long, (Array[Long], Array[(Long, Long)]))] =
+        sc.cache(qv.partitionBy(qPart).mapValues { qvec =>
+          val top = entriesB.value
+            .map { case (nid, nvec) => (sseJvm(qvec, nvec), nid) }
+            .sorted.take(entryBeam)
+          (qvec, top)
+        })
+      var r = 0
+      while (r < rounds) {
+        val front = visited.flatMap { case (qid, (_, arr)) =>
+          arr.iterator.take(beam).map { case (_, nid) => (nid, qid) } }
+        val cand = front.partitionBy(nPart)
+          .join(adj) // narrow: both on nPart
+          .flatMap { case (_, (qid, dsts)) => dsts.iterator.map(d => (d, qid)) }
+          .partitionBy(nPart)
+          .mapPartitions({ it =>
+            // global (dst, qid) dedupe: keyed by dst, so equal pairs
+            // land in one partition — dedupe before the vector fetch
+            val seen = scala.collection.mutable.HashSet.empty[(Long, Long)]
+            it.filter(seen.add)
+          }, preservesPartitioning = true)
+          .join(nvP) // narrow: (dst, (qid, nvec))
+          .map { case (nid, (qid, nvec)) => (qid, (nid, nvec)) }
+        visited = sc.cache(visited.cogroup(cand, qPart).flatMap { case (qid, (oldIt, newIt)) =>
+          oldIt.headOption.map { case (qvec, arr) =>
+            val m = scala.collection.mutable.LongMap.empty[Long] // nid -> d
+            arr.foreach { case (d, nid) => m(nid) = d }
+            newIt.foreach { case (nid, nvec) =>
+              if (!m.contains(nid)) m(nid) = sseJvm(qvec, nvec) }
+            (qid, (qvec, m.iterator.map { case (nid, d) => (d, nid) }.toArray.sorted))
+          }
+        })
+        r += 1
+      }
+      val out = visited.flatMap { case (qid, (_, arr)) =>
+        arr.iterator.take(k).zipWithIndex.map { case ((d, nid), i) =>
+          (qid, (i + 1).toLong, nid, d) } }
+      // eager k×queries result; the scope frees every round's cache
+      val result = sc.cut(spark.createDataset(out).toDF(qidCol, "rk", idCol, "idist"))
+      entriesB.destroy()
+      result
     }
-    val out = visited.flatMap { case (qid, (_, arr)) =>
-      arr.iterator.take(k).zipWithIndex.map { case ((d, nid), i) =>
-        (qid, (i + 1).toLong, nid, d) } }
-    // eager k×queries result, then free every round's cache and the
-    // entry broadcast (the r13 free-on-exit contract)
-    val result = spark.createDataset(out)
-      .toDF(qidCol, "rk", idCol, "idist")
-      .localCheckpoint(true)
-    retired.foreach(_.unpersist(blocking = false))
-    entriesB.destroy()
-    result
   }
 }

@@ -86,8 +86,8 @@ object ProductQuantizer {
             refinements: Int = 1): Model = {
     require(dim % m == 0, s"m=$m must divide dim=$dim")
     val subDim = dim / m
-    val slim = vectors.select(col(idCol), col(vecCol)).persist()
-    try {
+    graft.Exec.scoped { b =>
+      val slim = b.cache(vectors.select(col(idCol), col(vecCol)))
       slim.count()
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -98,9 +98,6 @@ object ProductQuantizer {
             subDim, k, idCol, "_sub", refinements)
         })), scala.concurrent.duration.Duration.Inf).toArray
       Model(dim, m, k, books)
-    } finally {
-      slim.unpersist()
-      ()
     }
   }
 
@@ -155,8 +152,8 @@ object ProductQuantizer {
                      scaleBits: Int = 10, refinements: Int = 1): QuantPq = {
     require(dim % m == 0, s"m=$m must divide dim=$dim")
     val subDim = dim / m
-    val slim = vectors.select(col(idCol), col(vecCol)).persist()
-    try {
+    graft.Exec.scoped { b =>
+      val slim = b.cache(vectors.select(col(idCol), col(vecCol)))
       slim.count()
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -167,9 +164,6 @@ object ProductQuantizer {
             subDim, k, idCol, "_sub", scaleBits, refinements)
         })), scala.concurrent.duration.Duration.Inf).toArray
       QuantPq(dim, m, k, scaleBits, books)
-    } finally {
-      slim.unpersist()
-      ()
     }
   }
 

@@ -857,11 +857,11 @@ object TxLog {
     // anti-join probe and the merged union — three executions of the
     // caller's arbitrary source plan without a boundary (exchange
     // reuse can't dedupe them: each prunes different columns). One
-    // eager localCheckpoint runs that plan once; the boundary is
-    // churn-sized (the batch being upserted, about to be written
-    // anyway), never table-sized, and is freed before returning.
-    val src = source.localCheckpoint(true)
-    try {
+    // eager cut runs that plan once; the boundary is churn-sized (the
+    // batch being upserted, about to be written anyway), never
+    // table-sized.
+    graft.Exec.scoped { b =>
+      val src = b.cut(source)
       val range = src.agg(smin(col(key)), smax(col(key))).head // two scalars
       val candExpr =
         if (range.isNullAt(0)) None
@@ -879,7 +879,7 @@ object TxLog {
       commitWithRebase(table, snap.version + 1,
         CommitInfo("upsert") +: (victims.map(Remove) ++ adds.map(Add)),
         victims.toSet, "upsert")
-    } finally graft.Exec.freeCheckpoint(src)
+    }
   }
 
   /** Bin-pack files smaller than `smallBytes` into rewritten groups —

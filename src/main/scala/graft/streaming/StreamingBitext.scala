@@ -71,7 +71,9 @@ object StreamingBitext {
       .withColumn("d", GraphAnn.intDist(col("_qt"), col("_qs")))
       .select(col("tgt_id"), col("src_id"), col("d"))
       .dropDuplicates("tgt_id", "src_id")
-    graft.Exec.withCached(cand0) { cand =>
+    graft.Exec.scoped { b =>
+      val cand = b.cache(cand0)
+      cand.count() // fill once before the branches race
       def pool(keyCol: String, otherCol: String, outN: String, outSum: String) =
         cand.withColumn("_r", row_number().over(
           Window.partitionBy(col(keyCol)).orderBy(col("d"), col(otherCol))))
@@ -83,13 +85,13 @@ object StreamingBitext {
       val best = cand.withColumn("_r", row_number().over(
         Window.partitionBy(col("tgt_id")).orderBy(col("d"), col("src_id"))))
         .filter(col("_r") === 1).drop("_r")
-      best.join(tgtPool, Seq("tgt_id"))
+      b.cut(best.join(tgtPool, Seq("tgt_id"))
         .join(srcPool, Seq("src_id"))
         .select(col("tgt_id"), col("src_id"), col("d").as("dist"),
           (col("_nt") + col("_ns")).as("nn_n"),
           (col("_st") + col("_ss")).as("nn_sum"),
           (col("d") * (col("_nt") + col("_ns")) * marginPct <
-            (col("_st") + col("_ss")) * 100L).as("selected"))
+            (col("_st") + col("_ss")) * 100L).as("selected")))
     }
   }
 

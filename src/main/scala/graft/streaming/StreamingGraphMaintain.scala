@@ -91,11 +91,10 @@ object StreamingGraphMaintain {
       col("idist").as("dist"))
     val rev = found.select(col("vec_id").as("src"), col("query_id").as("dst"),
       col("idist").as("dist"))
-    val newEdges = fwd.unionByName(rev)
-      .withColumn("bucket", pmod(col("src"), lit(srcBuckets)))
-      .withColumn("batch_no", lit(batchId))
-      .persist()
-    try {
+    graft.Exec.scoped { b =>
+      val newEdges = b.cache(fwd.unionByName(rev)
+        .withColumn("bucket", pmod(col("src"), lit(srcBuckets)))
+        .withColumn("batch_no", lit(batchId)))
       newEdges.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket", "batch_no").parquet(s"$indexDir/edges")
@@ -149,7 +148,7 @@ object StreamingGraphMaintain {
       // 4): it EXECUTES the rebuild — offline build over the full
       // maintained node set, staged then swapped
       if (gate) rebuild(spark, indexDir, batchId)
-    } finally { newEdges.unpersist(blocking = false); () }
+    }
   }
 
   /** Centroid count for a rebuild: √n clamped to [4, 64] — the IVF
@@ -174,10 +173,9 @@ object StreamingGraphMaintain {
   private[graft] def rebuild(spark: SparkSession, indexDir: String,
                              batchId: Long, nprobe: Int = 3): Unit = {
     import graft.similarity.IvfIndex
-    val all = spark.read.parquet(s"$indexDir/nodes")
-      .where(col("batch_no") <= batchId).drop("bucket", "batch_no")
-      .persist()
-    try {
+    graft.Exec.scoped { b =>
+      val all = b.cache(spark.read.parquet(s"$indexDir/nodes")
+        .where(col("batch_no") <= batchId).drop("bucket", "batch_no"))
       val srcBuckets = spark.read.parquet(s"$indexDir/meta")
         .collect().head.getAs[Int]("src_buckets")
       val n = all.count()
@@ -197,7 +195,7 @@ object StreamingGraphMaintain {
       java.nio.file.Files.move(java.nio.file.Paths.get(stage, "meta2"),
         java.nio.file.Paths.get(stage, "meta"))
       swapInPlace(indexDir, stage)
-    } finally { all.unpersist(blocking = false); () }
+    }
   }
 
   /** Move the live index tiers aside, the staged tiers into place,

@@ -70,24 +70,23 @@ object StreamingIngest {
     val self = IncrementalDedup
       .selfDuplicates(batch, threshold = threshold, cfg = cfg)
     val keepers = batch.join(self.select("doc_id"), Seq("doc_id"), "left_anti")
-    val verdicts = IncrementalDedup
-      .dedupBatch(index, keepers, threshold = threshold, cfg = cfg)
-      .unionByName(self)
-      .persist()
-    verdicts.count() // materialize once: both writes below read it
-    verdicts.withColumn("batch_no", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_no").parquet(verdictDir)
-    val accepted = batch.join(
-      verdicts.filter(col("is_novel")).select("doc_id"), Seq("doc_id"), "left_semi")
-    MinHashLsh.signatures(accepted, "doc_id", "text", cfg)
-      .withColumn("batch_no", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_no").parquet(indexDir)
-    verdicts.unpersist()
-    ()
+    graft.Exec.scoped { b =>
+      val verdicts = b.cache(IncrementalDedup
+        .dedupBatch(index, keepers, threshold = threshold, cfg = cfg)
+        .unionByName(self))
+      verdicts.count() // materialize once: both writes below read it
+      verdicts.withColumn("batch_no", lit(batchId))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_no").parquet(verdictDir)
+      val accepted = batch.join(
+        verdicts.filter(col("is_novel")).select("doc_id"), Seq("doc_id"), "left_semi")
+      MinHashLsh.signatures(accepted, "doc_id", "text", cfg)
+        .withColumn("batch_no", lit(batchId))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_no").parquet(indexDir)
+    }
   }
 
   /** Wire the loop: each micro-batch of new docs is dedup-verdicted

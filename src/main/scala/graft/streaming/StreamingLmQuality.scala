@@ -7,8 +7,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** D28 — streaming LM QUALITY GATE: the CCNet deployment shape of
   * q164. The Kneser-Ney model trains ONCE in batch on the clean
-  * corpus (`LmQuality.trainModel`, persisted by the caller — the
-  * Wikipedia side); documents arriving on a file stream are scored
+  * corpus (`LmQuality.trainModel`, its bigram table an eager cut —
+  * the Wikipedia side); documents arriving on a file stream are scored
   * per micro-batch against that static model and land as
   * (doc_id, n_pairs, n_seen, n_oov_ctx, mean_p, bucket) verdicts —
   * incoming crawl data is quality-bucketed BEFORE it enters the

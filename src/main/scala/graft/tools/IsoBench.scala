@@ -60,7 +60,7 @@ object IsoBench {
     val b1 = sys.env.get("SPARK_GRAFT_ISO_SERIALIZER")
       .fold(b0)(s => b0.config("spark.serializer", s))
     // r18: generic conf injection for flag-toggle A/Bs, e.g.
-    // SPARK_GRAFT_ISO_CONF="spark.graft.suffix.cacheMaxBytes=0"
+    // SPARK_GRAFT_ISO_CONF="spark.graft.graph.rowsPerPartition=1000000"
     val spark = sys.env.get("SPARK_GRAFT_ISO_CONF")
       .map(_.split(',').filter(_.contains('=')))
       .fold(b1)(_.foldLeft(b1) { (b, kv) =>

@@ -70,11 +70,13 @@ object ProbeQ210 {
     )
     for ((degree, nprobe, beam, rounds, entryBeam, maxLevel) <- grid) {
       val t0 = System.nanoTime()
-      val got = graft.Exec.withCached(
-        graft.similarity.GraphAnn.knnGraph(e, model, degree = degree, nprobe = nprobe)) { edges =>
-        graft.similarity.GraphAnn.search(e, edges, queries,
+      val got = graft.Exec.scoped { b =>
+        val edges = b.cache(
+          graft.similarity.GraphAnn.knnGraph(e, model, degree = degree, nprobe = nprobe))
+        edges.count()
+        b.cut(graft.similarity.GraphAnn.search(e, edges, queries,
           maxLevel = maxLevel, scaleBits = model.scaleBits,
-          k = 5, beam = beam, rounds = rounds, entryBeam = entryBeam)
+          k = 5, beam = beam, rounds = rounds, entryBeam = entryBeam))
       }.select(col("query_id"), col("vec_id"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val dt = (System.nanoTime() - t0) / 1e9

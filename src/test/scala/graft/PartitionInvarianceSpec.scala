@@ -81,7 +81,7 @@ class PartitionInvarianceSpec extends SparkSpec {
     }
     val edges = (for { a <- 1L to 15L; b <- (a + 1) to 15L if (a * 31 + b) % 3 == 0 }
       yield (a, b)).toDF("s", "d")
-    inv("nodeMetrics", edges)(e => operators.GraphMetrics.nodeMetrics(e, "s", "d"))
+    inv("nodeMetrics", edges)(e => operators.GraphMetrics.nodeMetricsOnePass(e, "s", "d"))
     inv("kCore", edges)(e => operators.GraphMetrics.kCore(e, "s", "d", k = 3))
     inv("bloomJoin", fact) { f =>
       val dim = Seq((1L, "a"), (3L, "b")).toDF("k", "attr")

@@ -268,7 +268,7 @@ class PlanShapeSpec extends SparkSpec {
       assert(!p.contains("Window"), s"$q: rank must not use a window:\n$p")
       assert(p.contains("MapPartitionsRDD"), s"$q: expected the zipWithIndex rank scan:\n$p")
     }
-    // q168 executes eagerly inside withCached (the offsets pass and
+    // q168 executes eagerly inside an Exec scope (the offsets pass and
     // the window pass must share one cached range layout), so the
     // returned plan is the materialized one-row scan — assert exactly
     // that contract; the window's partition-locality is pinned

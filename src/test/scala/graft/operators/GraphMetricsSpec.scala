@@ -11,7 +11,7 @@ class GraphMetricsSpec extends SparkSpec {
   import spark.implicits._
 
   private def metrics(edges: Seq[(Long, Long)]): Map[Long, (Long, Long)] =
-    GraphMetrics.nodeMetrics(edges.toDF("s", "d"), "s", "d")
+    GraphMetrics.nodeMetricsOnePass(edges.toDF("s", "d"), "s", "d")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
 
   test("known graphs: triangle, square, square with diagonal, star") {

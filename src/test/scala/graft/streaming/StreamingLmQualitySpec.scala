@@ -18,7 +18,7 @@ class StreamingLmQualitySpec extends SparkSpec {
     val cp = Files.createTempDirectory("graft_lmcp").toString
 
     val train = Seq((100L, "a b a b c q a b"), (101L, "a b c a b")).toDF("doc_id", "text")
-    val model = LmQuality.trainModel(train).persist()
+    val model = LmQuality.trainModel(train)
     try {
       // doc 1: in-vocabulary; doc 2: context z is OOV for the model
       Files.writeString(java.nio.file.Paths.get(in, "d1.jsonl"),
@@ -47,6 +47,6 @@ class StreamingLmQualitySpec extends SparkSpec {
       val second = spark.read.parquet(out)
       assert(second.count() == 3)
       assert(second.filter($"doc_id" === 3L).count() == 1)
-    } finally model.unpersist()
+    } finally graft.Exec.free(model.bg)
   }
 }
