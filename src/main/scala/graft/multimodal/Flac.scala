@@ -50,9 +50,6 @@ object Flac {
     private var acc = 0L // bits pending, MSB-aligned within low `nb` bits
     private var nb = 0
 
-    def bytesWritten: Int = nBytes
-    def bitAligned: Boolean = nb == 0
-
     def write(v: Long, bits: Int): Unit = {
       var rem = bits
       while (rem > 0) {

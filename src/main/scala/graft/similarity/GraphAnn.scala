@@ -60,7 +60,7 @@ object GraphAnn {
     *   maxLevel = clamp(⌊(fl2−4)/2⌋, 1, 15) // entry set ≈ n/4^ml ∈ [16,64)
     *   entryBeam = 3
     *
-    * Probe-measured at these values (ProbeQ210): recall@5 = 1.000 at
+    * Measured at these values (r16 sweep, PLANS.md q210): recall@5 = 1.000 at
     * n = 2000 (degree 16 / beam 16 / 6 rounds) vs 0.75 at the old
     * fixed knobs; the entry set stays a few dozen rows however large
     * n grows, preserving broadcastability.

@@ -91,7 +91,9 @@ object StreamingGraphMaintain {
       col("idist").as("dist"))
     val rev = found.select(col("vec_id").as("src"), col("query_id").as("dst"),
       col("idist").as("dist"))
-    graft.Exec.scoped { b =>
+    // the search result reads the search's own cut, which no scope
+    // here owns: free it once the batch has landed
+    val gate = try graft.Exec.scoped { b =>
       val newEdges = b.cache(fwd.unionByName(rev)
         .withColumn("bucket", pmod(col("src"), lit(srcBuckets)))
         .withColumn("batch_no", lit(batchId)))
@@ -144,11 +146,12 @@ object StreamingGraphMaintain {
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_no").parquet(monitorDir)
-      // the gate doesn't just signal any more (r17; r16 verdict task
-      // 4): it EXECUTES the rebuild — offline build over the full
-      // maintained node set, staged then swapped
-      if (gate) rebuild(spark, indexDir, batchId)
-    }
+      gate
+    } finally graft.Exec.free(found)
+    // the gate doesn't just signal any more (r17; r16 verdict task
+    // 4): it EXECUTES the rebuild — offline build over the full
+    // maintained node set, staged then swapped
+    if (gate) rebuild(spark, indexDir, batchId)
   }
 
   /** Centroid count for a rebuild: √n clamped to [4, 64] — the IVF

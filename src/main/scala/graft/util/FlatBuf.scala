@@ -127,10 +127,6 @@ object FlatBuf {
       if (v != default) { addByte(if (v) 1 else 0); slot(idx) }
     def addFieldOffset(idx: Int, off: Int): Unit =
       if (off != 0) { addOffset(off); slot(idx) }
-    /** Structs are stored INLINE and must be written immediately
-      * before this call (their bytes already pushed).
-      */
-    def addFieldStruct(idx: Int): Unit = slot(idx)
 
     def endTable(): Int = {
       addInt(0) // placeholder for the soffset to the vtable

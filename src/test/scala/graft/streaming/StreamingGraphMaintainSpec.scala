@@ -165,4 +165,20 @@ class StreamingGraphMaintainSpec extends SparkSpec {
     assert(!m.getAs[Boolean]("rebuild_gate"),
       "an empty-reverse-edge batch must not gate (and must not write NULLs)")
   }
+
+  test("maintenance batches leave no persistent RDDs behind") {
+    val idx = Files.createTempDirectory("graft_gmidx4").toString
+    val mon = Files.createTempDirectory("graft_gmmon4").toString
+    buildIndex(idx)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // scattered appends, alarm above any overflow fraction: no rebuild
+    // runs, so every batch takes the plain insert path
+    (0L until 4L).foreach { b =>
+      val drop = (0L until 3L).map(i => (300L + 3 * b + i, vec(7 * b + 5 * i + 1)))
+      StreamingGraphMaintain.maintainBatch(drop.toDF("vec_id", "embedding"), b, idx, mon, 1.0)
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"batch $b left ${left.size} persistent RDDs behind: $left")
+    }
+    assert(spark.read.parquet(mon).where(!$"rebuild_gate").count() === 4L)
+  }
 }
