@@ -62,14 +62,6 @@ object MinHashLsh {
     if (cfg.wordShingles) TextFunctions.wordShingles(text, cfg.shingleSize)
     else TextFunctions.charShingles(text, cfg.shingleSize)
 
-  /** (id, shingle-set) with the normalization materialized once. */
-  private def shingled(docs: DataFrame, idCol: String, textCol: String, cfg: Config): DataFrame =
-    if (cfg.wordShingles)
-      docs.select(col(idCol), TextFunctions.wordShingles(col(textCol), cfg.shingleSize).as("_sh"))
-    else
-      docs.select(col(idCol), TextFunctions.normalized(col(textCol)).as("_norm"))
-        .select(col(idCol), TextFunctions.charShinglesOfNorm(col("_norm"), cfg.shingleSize).as("_sh"))
-
   /** k-wide minhash signature (array<bigint>) over pre-materialized
     * shingle hashes. h_i(s) = (a_i * (xxhash64(s) mod P) + b_i) mod P,
     * min over shingles. Modular form keeps every product < 2^63
@@ -108,7 +100,7 @@ object MinHashLsh {
             col("_bases"), cfg.numHashes, cfg.seed).as("sig"))
     } else {
       // sig derives from the already-hashed DISTINCT bases (r15): the
-      // old shape ran minhashSig over the normalized text too — a
+      // old shape ran minhash_sig over the normalized text too — a
       // second full shingle-hash pass per document for values the
       // bases already carry (min over distinct = min over multiset)
       graft.functions.ShingleFunctions.register(docs.sparkSession)

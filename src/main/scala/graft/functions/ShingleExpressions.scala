@@ -267,8 +267,6 @@ object ShingleFunctions {
 
   def hashedShingles(text: Column, n: Int): Column =
     call_function("hashed_shingles", text, lit(n))
-  def minhashSig(text: Column, n: Int, k: Int, seed: Long): Column =
-    call_function("minhash_sig", text, lit(n), lit(k), lit(seed))
   def sortedJaccard(a: Column, b: Column): Column =
     call_function("sorted_jaccard", a, b)
   def wordBases(text: Column, n: Int): Column =

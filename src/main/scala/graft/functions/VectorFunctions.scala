@@ -7,12 +7,9 @@ import org.apache.spark.sql.functions._
   * built entirely from higher-order functions — runs as JVM
   * expressions inside the executor, no UDF boundary, no driver work.
   *
-  * Two flavors of the dot product:
-  *  - `dotFold`: strict left-to-right fold over indices. Bit-exact
-  *    reproducible across engines (the DuckDB oracle mirrors the same
-  *    fold), used wherever results are hash-compared.
-  *  - `dotFast`: zip_with form — same O(d), fewer array bound checks;
-  *    use in non-oracle hot paths.
+  * `dotFold` is a strict left-to-right fold over indices: bit-exact
+  * reproducible across engines (the DuckDB oracle mirrors the same
+  * fold), used wherever results are hash-compared.
   */
 object VectorFunctions {
 
@@ -21,10 +18,6 @@ object VectorFunctions {
     aggregate(
       transform(sequence(lit(1), lit(dim)),
         i => element_at(a, i).cast("double") * element_at(b, i).cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
-  def dotFast(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, x) => acc + x)
 
   def norm(a: Column, dim: Int): Column = sqrt(dotFold(a, a, dim))

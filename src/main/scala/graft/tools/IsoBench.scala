@@ -1,18 +1,56 @@
 package graft.tools
 
-import graft.{BenchGate, SparkEntry}
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
-/** Ad-hoc single-query benchmark (no suite warm-up, N iterations,
-  * median/min/max): `sbt "runMain graft.tools.IsoBench q50_profile"`.
-  * Isolates a query from suite-JVM effects when a full Bench number
-  * looks off.
+import graft.{BenchGate, GraftSession, SparkEntry}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.catalyst.plans.logical.OverwriteByExpression
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** The one query tool: times named queries in isolation (no suite
+  * warm-up), splits each run into construction and sink, and can dump
+  * each query's initial and final plans.
   *
-  * r17: load-gated like Bench (sleep-waits for 1-min loadavg < 0.5
-  * before starting) and every line carries the external-cores
-  * sentinel measured over that query's batch window via /proc/stat —
-  * this box sees intermittent multi-core external load that a
-  * pre-run loadavg check alone cannot rule out mid-batch.
+  * Usage:
+  * {{{
+  * sbt "runMain graft.tools.IsoBench <q> [<q> ...] [--age] [--plans <dir>]"
+  * }}}
+  *  - `--age` runs the full suite once before timing, so a query is
+  *    timed in a session as heavy as the suite leaves it (fresh vs
+  *    aged separates "the operator regressed" from "the session grew");
+  *  - `--plans <dir>` writes `<q>_initial.txt` (the formatted explain
+  *    before execution) and `<q>_final.txt` (the executed plan of the
+  *    sink's own QueryExecution, `isFinalPlan=true` where adaptive);
+  *    pick one dir per side of an A/B.
+  *
+  * Environment: `SPARK_GRAFT_SF_DIR` (default sf0.1),
+  * `SPARK_GRAFT_ISO_ITERS` (timed iterations, default 3),
+  * `SPARK_GRAFT_CPUS` (`local[N]` and N shuffle partitions, default
+  * 32, as `Bench` reads it) and `SPARK_GRAFT_ISO_CONF` (`k=v,k=v`
+  * applied on top of `GraftSession.builder`, e.g. to switch AQE, the
+  * serializer or shuffle partitions for an A/B).
+  *
+  * Load-gated like `Bench` (sleep-waits for 1-min loadavg < 0.5). Each
+  * query runs once untimed, then `iters` timed noop-sink runs, and
+  * prints one line:
+  *  - `median`/`min`/`max`: wall seconds per run (construction + sink);
+  *  - `build`/`sink`: median seconds of the construction call (eager
+  *    cuts run here) and of the noop write, from the same two
+  *    timestamps that span each run;
+  *  - `ext`: cores busy outside this process tree over the timed
+  *    window (/proc/stat); > 0.5 means the numbers are suspect;
+  *  - `cpu`: own process-tree CPU seconds per run — at `local[N]` a
+  *    lazy plan's duplicated subtrees run concurrently on idle cores,
+  *    so wall can hide a recompute that CPU shows;
+  *  - `plan_ms`: median `QueryPlanningTracker` phase milliseconds of the
+  *    sink's own QueryExecution (analysis/optimization/planning), read
+  *    from a listener, so nothing is planned twice; the query's own
+  *    analysis runs at construction and counts in `build`;
+  *  - `rdds`/`heap_mb`: persistent-RDD count and used heap after the
+  *    query (blocks a query leaves behind show here).
   */
 object IsoBench {
   private def load1(): Double =
@@ -46,53 +84,123 @@ object IsoBench {
     (sysBusy, own)
   }
 
+  /** Each successful noop sink's own QueryExecution, in write order.
+    * Register once per session; calls arrive on the listener bus, so
+    * `take` waits for them. The sink is the one V2 overwrite graft
+    * runs: its own writes go through V1 parquet.
+    */
+  final class Sinks extends QueryExecutionListener {
+    private val done = new LinkedBlockingQueue[QueryExecution]()
+    override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+      if (qe.logical.isInstanceOf[OverwriteByExpression]) done.put(qe)
+    override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+
+    def take(n: Int): Seq[QueryExecution] = Seq.fill(n) {
+      val qe = done.poll(120, TimeUnit.SECONDS)
+      if (qe == null) throw new IllegalStateException("no sink call from the listener bus in 120 s")
+      qe
+    }
+  }
+
+  /** One timed run: `System.nanoTime` before construction, after it,
+    * and after the sink.
+    */
+  final case class Run(start: Long, built: Long, done: Long) {
+    def build: Double = (built - start) / 1e9
+    def sink: Double = (done - built) / 1e9
+    def wall: Double = (done - start) / 1e9
+  }
+
+  final case class Result(name: String, runs: Seq[Run], ext: Double, cpu: Double,
+                          planMs: Seq[(String, Long)], rdds: Int, heapMb: Long)
+
+  def cpus(env: Map[String, String] = sys.env): Int = env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  def builder(env: Map[String, String] = sys.env): SparkSession.Builder = {
+    val n = cpus(env)
+    env.get("SPARK_GRAFT_ISO_CONF").toSeq.flatMap(_.split(',')).filter(_.contains('='))
+      .foldLeft(GraftSession.builder(s"local[$n]", n)) { (b, kv) =>
+        val Array(k, v) = kv.split("=", 2); b.config(k.trim, v.trim)
+      }
+  }
+
+  private def sink(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
+  /** Warm `name` once (dumping its plans into `plans`, if given), then
+    * time `iters` runs. `sinks` must be registered on `spark` and hold
+    * no undelivered call.
+    */
+  def run(spark: SparkSession, sinks: Sinks, name: String, sfDir: String, iters: Int,
+          plans: Option[Path] = None): Result = {
+    val query = SparkEntry.queries(name)
+    val warm = query(spark, sfDir)
+    plans.foreach { dir =>
+      Files.createDirectories(dir)
+      Files.writeString(dir.resolve(s"${name}_initial.txt"),
+        warm.queryExecution.explainString(ExplainMode.fromString("formatted")))
+    }
+    sink(warm)
+    val warmQe = sinks.take(1).head
+    plans.foreach(dir => Files.writeString(dir.resolve(s"${name}_final.txt"),
+      warmQe.executedPlan.toString))
+
+    val (s0, o0) = cpuJiffies()
+    val runs = (1 to iters).map { _ =>
+      val t0 = System.nanoTime()
+      val df = query(spark, sfDir)
+      val t1 = System.nanoTime()
+      sink(df)
+      Run(t0, t1, System.nanoTime())
+    }
+    val (s1, o1) = cpuJiffies()
+    val window = (runs.last.done - runs.head.start) / 1e9
+    val ext =
+      if (s0 < 0 || o0 < 0 || s1 < 0 || o1 < 0 || window <= 0) -1.0
+      else math.max(0.0, ((s1 - s0) - (o1 - o0)) / 100.0 / window)
+    val cpu = if (o0 < 0 || o1 < 0) -1.0 else (o1 - o0) / 100.0 / iters
+
+    val phases = sinks.take(iters).map(_.tracker.phases)
+    val planMs = Seq(QueryPlanningTracker.ANALYSIS, QueryPlanningTracker.OPTIMIZATION,
+      QueryPlanningTracker.PLANNING).filter(p => phases.exists(_.contains(p)))
+      .map(p => p -> median(phases.flatMap(_.get(p)).map(_.durationMs)))
+    val rt = Runtime.getRuntime
+    Result(name, runs, ext, cpu, planMs, spark.sparkContext.getPersistentRDDs.size,
+      (rt.totalMemory - rt.freeMemory) / 1048576)
+  }
+
+  private def median[T: Ordering](xs: Seq[T]): T = xs.sorted.apply(xs.length / 2)
+
+  def line(r: Result): String = {
+    val walls = r.runs.map(_.wall)
+    val plan = r.planMs.map { case (p, ms) => s"$p:$ms" }.mkString(",")
+    f"ISO ${r.name}%-26s median=${median(walls)}%.3f min=${walls.min}%.3f max=${walls.max}%.3f " +
+      f"build=${median(r.runs.map(_.build))}%.3f sink=${median(r.runs.map(_.sink))}%.3f " +
+      f"ext=${r.ext}%.2f cpu=${r.cpu}%.2f plan_ms=$plan rdds=${r.rdds} heap_mb=${r.heapMb}"
+  }
+
   def main(args: Array[String]): Unit = {
+    val plans = args.sliding(2).collectFirst { case Array("--plans", dir) => dir }
+    val names = args.toSeq.filterNot(a => a == "--age" || a == "--plans" || plans.contains(a))
     val iters = sys.env.getOrElse("SPARK_GRAFT_ISO_ITERS", "3").toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val (gateLoad, waited) = BenchGate.gateWait(
       load1 _, s => Thread.sleep(s * 1000L), 0.5, 600)
     System.err.println(f"[iso] gate: load ${gateLoad}%.2f after ${waited}s wait")
-    val b0 = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val b1 = sys.env.get("SPARK_GRAFT_ISO_SERIALIZER")
-      .fold(b0)(s => b0.config("spark.serializer", s))
-    // r18: generic conf injection for flag-toggle A/Bs, e.g.
-    // SPARK_GRAFT_ISO_CONF="spark.graft.graph.rowsPerPartition=1000000"
-    val spark = sys.env.get("SPARK_GRAFT_ISO_CONF")
-      .map(_.split(',').filter(_.contains('=')))
-      .fold(b1)(_.foldLeft(b1) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k.trim, v.trim)
-      })
-      .getOrCreate()
+    val spark = builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val names = args.toSeq
-    val qs = SparkEntry.queries
-    names.foreach { n => qs(n)(spark, sfDir).write.format("noop").mode("overwrite").save() } // warm
-    names.foreach { n =>
-      val (s0, o0) = cpuJiffies()
-      val t0w = System.nanoTime()
-      val ts = (1 to iters).map { _ =>
-        val t0 = System.nanoTime()
-        qs(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+    val sinks = new Sinks
+    spark.listenerManager.register(sinks)
+    if (args.contains("--age")) {
+      val t0 = System.nanoTime()
+      var writes = 0
+      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (n, f) =>
+        try { sink(f(spark, sfDir)); writes += 1 }
+        catch { case e: Throwable => System.err.println(s"[iso] aging $n failed: ${e.getMessage}") }
       }
-      val wall = (System.nanoTime() - t0w) / 1e9
-      val (s1, o1) = cpuJiffies()
-      val ext =
-        if (s0 < 0 || o0 < 0 || s1 < 0 || o1 < 0 || wall <= 0) -1.0
-        else math.max(0.0, ((s1 - s0) - (o1 - o0)) / 100.0 / wall)
-      // r18: own-CPU seconds per iteration — the scale-relevant cost.
-      // At sf0.1 on local[32] a lazy plan's duplicated subtrees run
-      // CONCURRENTLY on otherwise-idle cores, so wall time can hide a
-      // 3-5x recompute that is pure added cost at cluster scale; the
-      // process-tree CPU delta per iteration sees exactly that work.
-      val cpuPerIter =
-        if (o0 < 0 || o1 < 0) -1.0 else (o1 - o0) / 100.0 / iters
-      println(f"ISO $n%-26s median=${ts.sorted.apply(iters / 2)}%.3f min=${ts.min}%.3f max=${ts.max}%.3f ext=$ext%.2f cpu=$cpuPerIter%.2f")
+      sinks.take(writes)
+      System.err.println(f"[iso] aged by the full suite in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
+    names.foreach(n => println(line(run(spark, sinks, n, sfDir, iters, plans.map(Paths.get(_))))))
     spark.stop()
   }
 }

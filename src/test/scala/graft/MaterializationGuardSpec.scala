@@ -6,10 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps the one materialization boundary and the one memo store from
-  * drifting back: outside `Exec.scala`, main code caches, cuts and
-  * frees only through an `Exec.Scope` or `Exec.free`, and `SparkEntry`
-  * memoizes only through `Memo`.
+/** Keeps the one materialization boundary, the one memo store and the
+  * one session factory from drifting back: outside `Exec.scala`, main
+  * code caches, cuts and frees only through an `Exec.Scope` or
+  * `Exec.free`; `SparkEntry` memoizes only through `Memo`, under a
+  * pinned list of names; and sessions open through `GraftSession`.
   */
 class MaterializationGuardSpec extends AnyFunSuite {
 
@@ -40,5 +41,28 @@ class MaterializationGuardSpec extends AnyFunSuite {
     assert(entry.size == 1)
     val found = hits(entry, Seq("ConcurrentHashMap", "TrieMap", "WeakHashMap"))
     assert(found.isEmpty, found.mkString("memo maps outside graft.Memo:\n", "\n", ""))
+  }
+
+  test("sessions open through GraftSession: no SparkSession.builder elsewhere in main code") {
+    val allowed = Seq(Paths.get("graft", "GraftSession.scala"), Paths.get("graft", "Bench.scala"))
+    val files = sources.filterNot(f => allowed.exists(f.endsWith))
+    val found = hits(files, Seq("SparkSession.builder"))
+    assert(found.isEmpty, found.mkString("session builders outside GraftSession:\n", "\n", ""))
+  }
+
+  test("the memo registry's names are pinned string literals") {
+    val call = """Memo\.(frame|model|dir)(\[[^\]]*\])?\s*\(\s*[^,]*,\s*""".r
+    val literal = """"([^"]+)"\s*,""".r
+    val named = for {
+      f <- sources
+      text = Files.readString(f)
+      m <- call.findAllMatchIn(text)
+    } yield literal.findPrefixMatchOf(text.substring(m.end))
+      .map(_.group(1)).toRight(s"$f:${text.take(m.start).count(_ == '\n') + 1}")
+    val notLiteral = named.collect { case Left(at) => at }
+    assert(notLiteral.isEmpty, notLiteral.mkString("memo names that are not string literals:\n", "\n", ""))
+    assert(named.collect { case Right(n) => n }.sorted == Seq(
+      "lpa_labels", "q183_labels", "q210_edges", "perceptron", "q72_model",
+      "ivf", "q54_index", "pq", "q216_idx").sorted)
   }
 }
