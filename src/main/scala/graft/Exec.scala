@@ -8,6 +8,7 @@ import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
+import org.apache.spark.sql.graft.Shims
 import org.apache.spark.storage.StorageLevel
 
 /** The one materialization boundary: every cache, lineage cut and
@@ -154,7 +155,8 @@ object Exec {
   }
 
   private def freeRdd(rdd: RDD[_]): Unit = quietly {
-    rdd.unpersist(blocking = false)
+    // freeing a truncated lineage is the point: skip unpersist's warning
+    if (Shims.locallyCheckpointed(rdd)) Shims.dropBlocks(rdd) else rdd.unpersist(blocking = false)
     rdd.getCheckpointFile.foreach { f =>
       val p = new Path(f)
       p.getFileSystem(rdd.sparkContext.hadoopConfiguration).delete(p, true)

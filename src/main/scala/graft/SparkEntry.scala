@@ -5564,7 +5564,7 @@ object SparkEntry {
       StringCol("name", base.map(_._2))))
     val f = java.nio.file.Files.createTempFile("graft_q145", ".parquet")
     java.nio.file.Files.write(f, bytes)
-    val back = s.read.parquet(f.toString) // Spark's reader on OUR bytes
+    val back = Tables.open(s, f.toString) // Spark's reader on OUR bytes
     back.agg(
       count(lit(1)).as("n_rows"),
       sum(col("id")).as("sum_id"),
@@ -5574,7 +5574,7 @@ object SparkEntry {
       .withColumn("names_md5",
         lit({ // order-canonical digest computed from the read-back path
           val md = java.security.MessageDigest.getInstance("MD5")
-          val readBack = s.read.parquet(f.toString)
+          val readBack = Tables.open(s, f.toString)
             .select("id", "name").orderBy("id").as[(Long, String)].collect()
           readBack.foreach(r => md.update(r._2.getBytes("UTF-8")))
           md.digest().map(x => f"${x & 0xff}%02x").mkString

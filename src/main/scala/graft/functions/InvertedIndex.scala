@@ -1,5 +1,7 @@
 package graft.functions
 
+import graft.Tables
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -55,7 +57,7 @@ object InvertedIndex {
     */
   def readTerms(spark: SparkSession, dir: String, terms: Seq[String],
                 nBuckets: Int = 64): DataFrame = {
-    val post = spark.read.parquet(s"$dir/postings")
+    val post = Tables.open(spark, s"$dir/postings")
     post.filter(col("bucket").isin(terms.map(t =>
         bucketOf(t, nBuckets)).distinct.map(Long.box): _*))
       .filter(col("term").isin(terms: _*))

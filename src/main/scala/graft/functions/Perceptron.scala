@@ -1,5 +1,7 @@
 package graft.functions
 
+import graft.Tables
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -124,11 +126,11 @@ object Perceptron {
     * exactly).
     */
   def load(spark: org.apache.spark.sql.SparkSession, dir: String): Model = {
-    val m = spark.read.parquet(s"$dir/meta").collect()
+    val m = Tables.open(spark, s"$dir/meta").collect()
     require(m.nonEmpty, s"no perceptron metadata at $dir/meta")
     val buckets = m.head.getAs[Int]("buckets")
     val w = Array.fill(buckets)(0L)
-    spark.read.parquet(s"$dir/weights").collect() // model-sized: ≤ buckets rows
+    Tables.open(spark, s"$dir/weights").collect() // model-sized: ≤ buckets rows
       .foreach(r => w(r.getAs[Long]("bucket").toInt) = r.getAs[Long]("weight"))
     Model(buckets, m.head.getAs[Int]("epochs"), w)
   }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.Tables
+
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
@@ -171,5 +173,5 @@ object LabelPropagation {
     * frame that was saved (integer columns round-trip exactly).
     */
   def load(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/labels").select(col("id"), col("label"))
+    Tables.open(spark, s"$dir/labels").select(col("id"), col("label"))
 }

@@ -1,5 +1,7 @@
 package graft.similarity
 
+import graft.Tables
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -179,14 +181,14 @@ object GraphAnn {
     */
   def load(spark: org.apache.spark.sql.SparkSession, dir: String)
   : (DataFrame, DataFrame, Knobs, Int) = {
-    val m = spark.read.parquet(s"$dir/meta").collect()
+    val m = Tables.open(spark, s"$dir/meta").collect()
     require(m.nonEmpty, s"no graph-ANN metadata at $dir/meta")
     val r = m.head
     val knobs = Knobs(r.getAs[Long]("n"), r.getAs[Int]("max_level"),
       r.getAs[Int]("degree"), r.getAs[Int]("beam"), r.getAs[Int]("rounds"),
       r.getAs[Int]("entry_beam"))
-    (spark.read.parquet(s"$dir/nodes").drop("bucket", "batch_no"),
-      spark.read.parquet(s"$dir/edges").drop("bucket", "batch_no"),
+    (Tables.open(spark, s"$dir/nodes").drop("bucket", "batch_no"),
+      Tables.open(spark, s"$dir/edges").drop("bucket", "batch_no"),
       knobs, r.getAs[Int]("scale_bits"))
   }
 

@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.Tables
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -185,14 +186,14 @@ object IvfIndex {
     * assignments DataFrame).
     */
   def load(spark: org.apache.spark.sql.SparkSession, dir: String): (Model, DataFrame) = {
-    val rows = spark.read.parquet(s"$dir/model")
+    val rows = Tables.open(spark, s"$dir/model")
       .select(col("dim"), col("cid"), col("centroid")).collect()
     require(rows.nonEmpty, s"no model at $dir/model")
     val dim = rows.head.getInt(0)
     val centroids = rows.map { r =>
       (r.getInt(1), r.getSeq[Double](2).toArray)
     }.sortBy(_._1)
-    (Model(dim, centroids), spark.read.parquet(s"$dir/assignments"))
+    (Model(dim, centroids), Tables.open(spark, s"$dir/assignments"))
   }
 
   /** Probe search: explode each query to its nprobe bucket ids, join

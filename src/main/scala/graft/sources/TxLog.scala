@@ -11,6 +11,7 @@ import org.apache.spark.sql.graft.Shims
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.Tables
 import graft.util.Json
 
 /** Transactional table layout over parquet — the missing piece between
@@ -44,8 +45,9 @@ import graft.util.Json
   * Row-level operations rewrite ONLY the files whose stats overlap the
   * predicate (delete) or the source key range (upsert) — at 100 TB the
   * rewrite cost is proportional to the touched data, not the table.
-  * Reads stay plain `spark.read.parquet(liveFiles)`, so Catalyst
-  * pushdown/pruning and vectorized scans are untouched.
+  * Reads stay plain parquet scans of the live files under the
+  * snapshot schema (`spark.read.schema(s).parquet(liveFiles)`), so
+  * Catalyst pushdown/pruning and vectorized scans are untouched.
   *
   * Reference tie-in: the reference's batch loader persists batches with
   * a manifest and re-runs are expected to be idempotent
@@ -753,7 +755,7 @@ object TxLog {
     else {
       import org.apache.spark.sql.functions.col
       val dvFiles = withDv.map(p => snap.dvs(p).dvPath).distinct
-      val dv = spark.read.parquet(dvFiles.map(dataPath(table, _)): _*)
+      val dv = Tables.open(spark, dvFiles.map(dataPath(table, _)): _*)
         .filter(col("file").isin(withDv: _*))
         .select(col("file").as("_dv_f"), col("pos").as("_dv_i"))
       val cols = base.columns.toSeq
@@ -790,7 +792,7 @@ object TxLog {
     val oldDvFiles = victims.flatMap(p => snap.dvs.get(p).map(_.dvPath)).distinct
     val oldPos =
       if (oldDvFiles.isEmpty) None
-      else Some(spark.read.parquet(oldDvFiles.map(dataPath(table, _)): _*)
+      else Some(Tables.open(spark, oldDvFiles.map(dataPath(table, _)): _*)
         .filter(col("file").isin(victims: _*))
         .select(col("file"), col("pos")))
     // match on the EFFECTIVE view (already-hidden rows can't re-match)
@@ -815,7 +817,7 @@ object TxLog {
     Files.setLastModifiedTime(dvDst,
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
     // per-file hidden counts: one row per touched file (model-sized)
-    val counts = spark.read.parquet(dataPath(table, dvName))
+    val counts = Tables.open(spark, dataPath(table, dvName))
       .groupBy("file").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val dvActs = victims.flatMap(p => counts.get(p).map(n => Dv(p, dvName, n)))

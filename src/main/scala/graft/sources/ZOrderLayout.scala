@@ -1,5 +1,7 @@
 package graft.sources
 
+import graft.Tables
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -143,7 +145,7 @@ object ZOrderLayout {
     */
   def readBox(spark: SparkSession, dir: String, xCol: String, yCol: String,
               x0: Long, x1: Long, y0: Long, y1: Long, prefixBits: Int = 3): DataFrame =
-    spark.read.parquet(dir)
+    Tables.open(spark, dir)
       .filter(col("z_bucket").isin(boxBuckets(x0, x1, y0, y1, prefixBits): _*))
       .filter(col(xCol).between(x0, x1) && col(yCol).between(y0, y1))
 
@@ -188,7 +190,7 @@ object ZOrderLayout {
       bounds.count(_ <= v).toLong << (16 - bitsOf(bounds))
     val cells = boxBuckets(rank16(x0, boundsX), rank16(x1, boundsX),
       rank16(y0, boundsY), rank16(y1, boundsY), prefixBits)
-    spark.read.parquet(dir)
+    Tables.open(spark, dir)
       .filter(col("z_bucket").isin(cells: _*))
       .filter(col(xCol).cast("double").between(x0, x1) &&
         col(yCol).cast("double").between(y0, y1))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import graft.similarity.GraphAnn
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -61,7 +62,7 @@ object StreamingGraphMaintain {
                                    overflowAlarm: Double): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    val meta = spark.read.parquet(s"$indexDir/meta").collect().head
+    val meta = Tables.open(spark, s"$indexDir/meta").collect().head
     // a rebuild FOLDS every generation ≤ its trigger batch into the new
     // build generation and stamps the meta; replaying such a batch
     // (at-least-once restart across the swap) must be a no-op — its
@@ -78,9 +79,9 @@ object StreamingGraphMaintain {
     val srcBuckets = meta.getAs[Int]("src_buckets").toLong
     // pre-batch view: generations strictly BEFORE this batch, so a
     // retry sees exactly what the first attempt saw
-    val nodes = spark.read.parquet(s"$indexDir/nodes")
+    val nodes = Tables.open(spark, s"$indexDir/nodes")
       .where(col("batch_no") < batchId).drop("bucket", "batch_no")
-    val edges = spark.read.parquet(s"$indexDir/edges")
+    val edges = Tables.open(spark, s"$indexDir/edges")
       .where(col("batch_no") < batchId).drop("bucket", "batch_no")
     val queries = batch.select(col("vec_id").as("query_id"), col("embedding"))
     val found = GraphAnn.search(nodes, edges, queries,
@@ -112,7 +113,7 @@ object StreamingGraphMaintain {
         .withColumn("bucket", pmod(col("src"), lit(srcBuckets)))
       val touchedBuckets = touched.select("bucket").distinct()
         .collect().map(_.getLong(0))
-      val degrees = spark.read.parquet(s"$indexDir/edges")
+      val degrees = Tables.open(spark, s"$indexDir/edges")
         .where(col("bucket").isin(touchedBuckets.toIndexedSeq: _*) &&
           col("batch_no") <= batchId)
         .join(touched.select(col("src")), Seq("src"))
@@ -134,7 +135,7 @@ object StreamingGraphMaintain {
       // growth gate: steady scattered appends erode recall without ever
       // overflowing a degree (the knobs were scaled for the BUILD n) —
       // rebuild when the maintained set reaches 2× the build size
-      val nTotal = spark.read.parquet(s"$indexDir/nodes")
+      val nTotal = Tables.open(spark, s"$indexDir/nodes")
         .where(col("batch_no") <= batchId).count()
       val gate = overflow > overflowAlarm || nTotal >= 2L * kn.n
       import spark.implicits._
@@ -177,9 +178,9 @@ object StreamingGraphMaintain {
                              batchId: Long, nprobe: Int = 3): Unit = {
     import graft.similarity.IvfIndex
     graft.Exec.scoped { b =>
-      val all = b.cache(spark.read.parquet(s"$indexDir/nodes")
+      val all = b.cache(Tables.open(spark, s"$indexDir/nodes")
         .where(col("batch_no") <= batchId).drop("bucket", "batch_no"))
-      val srcBuckets = spark.read.parquet(s"$indexDir/meta")
+      val srcBuckets = Tables.open(spark, s"$indexDir/meta")
         .collect().head.getAs[Int]("src_buckets")
       val n = all.count()
       val dim = all.select(size(col("embedding"))).head.getInt(0)
@@ -191,7 +192,7 @@ object StreamingGraphMaintain {
       GraphAnn.save(all, edges, kn, model.scaleBits, stage, srcBuckets = srcBuckets)
       // stamp the fold point into the staged meta (meta2 → rename: the
       // meta dir is never half-written)
-      val stamped = spark.read.parquet(s"$stage/meta")
+      val stamped = Tables.open(spark, s"$stage/meta")
         .withColumn("rebuilt_at_batch", lit(batchId))
       stamped.coalesce(1).write.mode("overwrite").parquet(s"$stage/meta2")
       deleteTree(java.nio.file.Paths.get(stage, "meta"))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import graft.functions.Stats
 import graft.similarity.ProductQuantizer
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -59,7 +60,7 @@ object StreamingIndexMaintain {
     * first → probe reads prune to nprobe buckets at listing time).
     */
   def readIndex(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(indexDir).select("vec_id", "pq_code", "cid")
+    Tables.open(spark, indexDir).select("vec_id", "pq_code", "cid")
 
   /** Seed bucket occupancy — the drift reference (≤ buckets rows;
     * compute once next to the seed index).

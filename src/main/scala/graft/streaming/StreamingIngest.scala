@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import graft.dedup.{IncrementalDedup, MinHashLsh}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -62,7 +63,7 @@ object StreamingIngest {
     // exclude this batch's own partition: on a retry the previous
     // attempt may already have appended this batch's signatures, and
     // docs must not match themselves
-    val index = spark.read.parquet(indexDir)
+    val index = Tables.open(spark, indexDir)
       .filter(col("batch_no") < batchId).drop("batch_no")
     // batch SELF-dedup first (min-id keeper): identical docs arriving
     // in one micro-batch must produce one novel verdict, not two —

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import graft.functions.HllAgg
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -61,7 +62,7 @@ object StreamingSketchStore {
     */
   def readMerged(spark: SparkSession, dir: String, p: Int = 12): Dataset[MergedSketch] = {
     import spark.implicits._
-    spark.read.parquet(dir).as[SketchBlob]
+    Tables.open(spark, dir).as[SketchBlob]
       .groupByKey(_.key)
       .mapGroups { (k, it) =>
         var acc: Array[Byte] = null
@@ -117,7 +118,7 @@ object StreamingSketchStore {
   def readMergedKll(spark: SparkSession, dir: String, psBp: Seq[Int],
                     k: Int = 200): Dataset[MergedQuantiles] = {
     import spark.implicits._
-    spark.read.parquet(dir).as[KllBlob]
+    Tables.open(spark, dir).as[KllBlob]
       .groupByKey(_.key)
       .mapGroups { (key, it) =>
         val acc = graft.functions.KllAgg.emptyBuffer()

@@ -1,9 +1,11 @@
 package graft.tools
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingQueue, TimeUnit}
 
 import graft.{BenchGate, GraftSession, SparkEntry}
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.QueryPlanningTracker
 import org.apache.spark.sql.catalyst.plans.logical.OverwriteByExpression
@@ -45,6 +47,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *  - `cpu`: own process-tree CPU seconds per run — at `local[N]` a
   *    lazy plan's duplicated subtrees run concurrently on idle cores,
   *    so wall can hide a recompute that CPU shows;
+  *  - `jobs`: median Spark jobs started by the construction call and
+  *    by the sink, as `<build>/<sink>`;
   *  - `plan_ms`: median `QueryPlanningTracker` phase milliseconds of the
   *    sink's own QueryExecution (analysis/optimization/planning), read
   *    from a listener, so nothing is planned twice; the query's own
@@ -102,10 +106,47 @@ object IsoBench {
     }
   }
 
-  /** One timed run: `System.nanoTime` before construction, after it,
-    * and after the sink.
+  /** Spark jobs started per job tag. Register once per session
+    * (`sc.addSparkListener`); [[tagged]] tags every job its body starts
+    * on the calling thread. Job starts arrive on the listener bus, so
+    * call [[sync]] before reading counts with [[take]].
     */
-  final case class Run(start: Long, built: Long, done: Long) {
+  final class Jobs extends SparkListener {
+    private val started = new ConcurrentHashMap[String, Integer]()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags"))).toSeq
+        .flatMap(_.split(',')).foreach(t => started.merge(t, 1, (a: Integer, b: Integer) => a + b))
+
+    /** `body` with its jobs tagged `tag` (no commas). */
+    def tagged[T](sc: SparkContext, tag: String)(body: => T): T = {
+      sc.addJobTag(tag)
+      try body finally sc.removeJobTag(tag)
+    }
+
+    /** Wait until every job start before this call has been counted: a
+      * tagged marker job's start arrives after them (one bus queue
+      * delivers in order).
+      */
+    def sync(sc: SparkContext): Unit = {
+      val marker = s"sync#${System.nanoTime()}"
+      tagged(sc, marker)(sc.parallelize(Seq(0), 1).count())
+      val deadline = System.nanoTime() + 120L * 1000000000L
+      while (!started.containsKey(marker)) {
+        if (System.nanoTime() > deadline)
+          throw new IllegalStateException("no job start from the listener bus in 120 s")
+        Thread.sleep(2)
+      }
+      started.remove(marker)
+    }
+
+    /** Jobs counted under `tag` (forgetting it). */
+    def take(tag: String): Int = Option(started.remove(tag)).fold(0)(_.intValue)
+  }
+
+  /** One timed run: `System.nanoTime` before construction, after it,
+    * and after the sink, and the jobs each phase started.
+    */
+  final case class Run(start: Long, built: Long, done: Long, buildJobs: Int, sinkJobs: Int) {
     def build: Double = (built - start) / 1e9
     def sink: Double = (done - built) / 1e9
     def wall: Double = (done - start) / 1e9
@@ -127,11 +168,12 @@ object IsoBench {
   private def sink(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
   /** Warm `name` once (dumping its plans into `plans`, if given), then
-    * time `iters` runs. `sinks` must be registered on `spark` and hold
-    * no undelivered call.
+    * time `iters` runs. `sinks` and `jobs` must be registered on
+    * `spark`, and `sinks` must hold no undelivered call.
     */
-  def run(spark: SparkSession, sinks: Sinks, name: String, sfDir: String, iters: Int,
+  def run(spark: SparkSession, sinks: Sinks, jobs: Jobs, name: String, sfDir: String, iters: Int,
           plans: Option[Path] = None): Result = {
+    val sc = spark.sparkContext
     val query = SparkEntry.queries(name)
     val warm = query(spark, sfDir)
     plans.foreach { dir =>
@@ -145,14 +187,18 @@ object IsoBench {
       warmQe.executedPlan.toString))
 
     val (s0, o0) = cpuJiffies()
-    val runs = (1 to iters).map { _ =>
+    val stamps = (1 to iters).map { i =>
       val t0 = System.nanoTime()
-      val df = query(spark, sfDir)
+      val df = jobs.tagged(sc, s"$name#$i/build")(query(spark, sfDir))
       val t1 = System.nanoTime()
-      sink(df)
-      Run(t0, t1, System.nanoTime())
+      jobs.tagged(sc, s"$name#$i/sink")(sink(df))
+      (t0, t1, System.nanoTime())
     }
     val (s1, o1) = cpuJiffies()
+    jobs.sync(sc)
+    val runs = stamps.zip(1 to iters).map { case ((t0, t1, t2), i) =>
+      Run(t0, t1, t2, jobs.take(s"$name#$i/build"), jobs.take(s"$name#$i/sink"))
+    }
     val window = (runs.last.done - runs.head.start) / 1e9
     val ext =
       if (s0 < 0 || o0 < 0 || s1 < 0 || o1 < 0 || window <= 0) -1.0
@@ -164,7 +210,7 @@ object IsoBench {
       QueryPlanningTracker.PLANNING).filter(p => phases.exists(_.contains(p)))
       .map(p => p -> median(phases.flatMap(_.get(p)).map(_.durationMs)))
     val rt = Runtime.getRuntime
-    Result(name, runs, ext, cpu, planMs, spark.sparkContext.getPersistentRDDs.size,
+    Result(name, runs, ext, cpu, planMs, sc.getPersistentRDDs.size,
       (rt.totalMemory - rt.freeMemory) / 1048576)
   }
 
@@ -175,6 +221,7 @@ object IsoBench {
     val plan = r.planMs.map { case (p, ms) => s"$p:$ms" }.mkString(",")
     f"ISO ${r.name}%-26s median=${median(walls)}%.3f min=${walls.min}%.3f max=${walls.max}%.3f " +
       f"build=${median(r.runs.map(_.build))}%.3f sink=${median(r.runs.map(_.sink))}%.3f " +
+      f"jobs=${median(r.runs.map(_.buildJobs))}/${median(r.runs.map(_.sinkJobs))} " +
       f"ext=${r.ext}%.2f cpu=${r.cpu}%.2f plan_ms=$plan rdds=${r.rdds} heap_mb=${r.heapMb}"
   }
 
@@ -190,6 +237,8 @@ object IsoBench {
     spark.sparkContext.setLogLevel("WARN")
     val sinks = new Sinks
     spark.listenerManager.register(sinks)
+    val jobs = new Jobs
+    spark.sparkContext.addSparkListener(jobs)
     if (args.contains("--age")) {
       val t0 = System.nanoTime()
       var writes = 0
@@ -200,7 +249,7 @@ object IsoBench {
       sinks.take(writes)
       System.err.println(f"[iso] aged by the full suite in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
-    names.foreach(n => println(line(run(spark, sinks, n, sfDir, iters, plans.map(Paths.get(_))))))
+    names.foreach(n => println(line(run(spark, sinks, jobs, n, sfDir, iters, plans.map(Paths.get(_))))))
     spark.stop()
   }
 }

@@ -6,11 +6,12 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps the one materialization boundary, the one memo store and the
-  * one session factory from drifting back: outside `Exec.scala`, main
-  * code caches, cuts and frees only through an `Exec.Scope` or
-  * `Exec.free`; `SparkEntry` memoizes only through `Memo`, under a
-  * pinned list of names; and sessions open through `GraftSession`.
+/** Keeps the one materialization boundary, the one memo store, the
+  * one session factory and the one parquet opener from drifting back:
+  * outside `Exec.scala`, main code caches, cuts and frees only through
+  * an `Exec.Scope` or `Exec.free`; `SparkEntry` memoizes only through
+  * `Memo`, under a pinned list of names; sessions open through
+  * `GraftSession`; and parquet opens through `Tables.open`.
   */
 class MaterializationGuardSpec extends AnyFunSuite {
 
@@ -64,5 +65,32 @@ class MaterializationGuardSpec extends AnyFunSuite {
     assert(named.collect { case Right(n) => n }.sorted == Seq(
       "lpa_labels", "q183_labels", "q210_edges", "perceptron", "q72_model",
       "ivf", "q54_index", "pq", "q216_idx").sorted)
+  }
+
+  test("parquet opens go through Tables.open, except the sites named here") {
+    // streaming view/CDC snapshot dirs and one mergeSchema read; convert
+    // one and its entry leaves this list
+    val kept = Seq(
+      "StreamingAnonymityGate.scala" -> """spark.read.option("mergeSchema", "true").parquet(outDir)""",
+      "StreamingCdc.scala" -> "val current = spark.read.parquet(snapDir)",
+      "StreamingCdc.scala" -> "spark.read.parquet(snapDir)",
+      "StreamingCdc.scala" -> """spark.read.parquet(snapDir).filter(col("batch_no") === n).drop("batch_no")""",
+      "StreamingMaterializedView.scala" -> "val current = spark.read.parquet(snapDir)",
+      "StreamingMaterializedView.scala" -> "val view = spark.read.parquet(viewDir)",
+      "StreamingMaterializedView.scala" -> "spark.read.parquet(viewDir)",
+      "StreamingMaterializedView.scala" ->
+        """spark.read.parquet(viewDir).filter(col("batch_no") === n).drop("batch_no")""")
+    val read = """\.read(\s*\.option\([^)]*\))*\s*\.parquet\(""".r
+    val found = for {
+      f <- sources if !f.endsWith(Paths.get("graft", "Tables.scala"))
+      text = Files.readString(f)
+      m <- read.findAllMatchIn(text)
+      line = text.take(m.start).count(_ == '\n')
+    } yield (f, line + 1, text.linesIterator.drop(line).next().trim)
+    val unexpected = found.filterNot { case (f, _, code) => kept.contains(f.getFileName.toString -> code) }
+    assert(unexpected.isEmpty, unexpected.map { case (f, n, code) => s"$f:$n: $code" }
+      .mkString("parquet reads outside Tables.open:\n", "\n", ""))
+    val gone = kept.diff(found.map { case (f, _, code) => f.getFileName.toString -> code })
+    assert(gone.isEmpty, gone.mkString("named sites no longer in the source (drop them here):\n", "\n", ""))
   }
 }
